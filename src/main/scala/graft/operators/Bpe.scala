@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Pinned, Scratch, Tables}
 
 /** BPE subword tokenization — train + encode (SURVEY.md §2.5 text
   * family, ta26). Every real training-data pipeline packs SUBWORD
@@ -242,44 +240,29 @@ object Bpe {
     (words, merges.result())
   }
 
-  /** Staged trained artifacts — write-once per (application, fixture),
-    * the gram-index discipline (Dedup.stagedGramForm's double-checked
-    * lock + _SUCCESS idempotence). Layout: <dir>/merges (rank, a, b)
-    * written first, <dir>/dict (word, freq, s) last — the dict's
-    * _SUCCESS gates the whole artifact, so a crashed partial build is
-    * rebuilt wholesale. */
-  private val stagedDictDirs = TrieMap.empty[String, String]
-  private def bpeArtifacts(s: SparkSession, d: String): String = {
-    graft.sources.Scratch.cleanupStale(s)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_bpe_dict_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedDictDirs.synchronized {
-      stagedDictDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(new java.io.File(dir, "dict"), "_SUCCESS").exists()) {
-          val (words, merges) = trainAll(s, d)
-          import s.implicits._
-          merges.toDF("rank", "a", "b")
-            .write.mode("overwrite").parquet(new java.io.File(dir, "merges").getPath)
-          // Dict laid out bucket-partitioned by the word key so the
-          // per-trigger encode (st26) prunes its batch's word buckets
-          // into the scan instead of reading the whole vocab-sized
-          // artifact every micro-batch (Scratch.ServeBuckets layout).
-          words
-            .withColumn("wbkt", pmod(hash(col("word")),
-              lit(graft.sources.Scratch.ServeBuckets)))
-            .write.mode("overwrite").partitionBy("wbkt")
-            .parquet(new java.io.File(dir, "dict").getPath)
-        }
-        dir.getPath
-      })
+  /** Staged trained artifacts — write-once per (application, fixture).
+    * Layout: <dir>/merges (rank, a, b) and <dir>/dict (word, freq, s),
+    * each committed as its own pinned artifact. */
+  private def bpeArtifacts(s: SparkSession, d: String): java.io.File =
+    Scratch.staged(s, d, "bpe_dict") { dir =>
+      val (words, merges) = trainAll(s, d)
+      import s.implicits._
+      val mergesDir = new java.io.File(dir, "merges")
+      merges.toDF("rank", "a", "b").write.mode("overwrite").parquet(mergesDir.getPath)
+      // Dict laid out bucket-partitioned by the word key so the
+      // per-trigger encode (st26) prunes its batch's word buckets
+      // into the scan instead of reading the whole vocab-sized
+      // artifact every micro-batch (Scratch.ServeBuckets layout).
+      val dictDir = new java.io.File(dir, "dict")
+      words.withColumn("wbkt", pmod(hash(col("word")), lit(Scratch.ServeBuckets)))
+        .write.mode("overwrite").partitionBy("wbkt").parquet(dictDir.getPath)
+      Pinned.commit(mergesDir): Unit
+      Pinned.commit(dictDir): Unit
     }
-    dir.getPath
-  }
   private[graft] def bpeDict(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(new java.io.File(bpeArtifacts(s, d), "dict").getPath)
+    Pinned.read(s, new java.io.File(bpeArtifacts(s, d), "dict"))
   private[graft] def bpeMerges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(new java.io.File(bpeArtifacts(s, d), "merges").getPath)
+    Pinned.read(s, new java.io.File(bpeArtifacts(s, d), "merges"))
 
   /** The encode step over any (doc_id, text) relation against a trained
     * (word, s) dict — extracted pure (exactDedupPartial's discipline) so
@@ -302,9 +285,9 @@ object Bpe {
     // left join's matches — and the oracle parity — are unchanged.
     val dictSide =
       if (batchLocal)
-        graft.sources.Scratch.routeBuckets(dict, "wbkt",
+        Scratch.routeBuckets(dict, "wbkt",
             tok.select(pmod(hash(col("word")),
-              lit(graft.sources.Scratch.ServeBuckets))))
+              lit(Scratch.ServeBuckets))))
           .select(col("word"), col("s"))
       else dict
     // OOV fallback = the BYTE DECOMPOSITION (never an opaque
@@ -379,31 +362,18 @@ object Bpe {
     subwordsPartial(Tables.documents(s, d),
       bpeDict(s, d).select(col("word"), col("s")))
 
-  /** [[docSubwords]] staged to parquet once per fixture (the gram-index
-    * discipline) — the relation a PER-MICRO-BATCH consumer (st28's RAG
-    * serving) joins against: re-tokenizing the corpus per batch would
-    * be a corpus scan per trigger, the anti-pattern the staged
-    * artifacts exist to retire. */
-  private val stagedStatsDirs = TrieMap.empty[String, String]
-  private[graft] def stagedDocStats(s: SparkSession, d: String): DataFrame = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_bpe_docstats_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedStatsDirs.synchronized {
-      stagedStatsDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists())
-          // Bucket-partitioned by doc_id: st28's per-trigger neighbor
-          // resolve routes its batch's buckets into the scan as
-          // PartitionFilters (the point-lookup serving layout).
-          docSubwords(s, d)
-            .withColumn("bkt", pmod(col("doc_id"),
-              lit(graft.sources.Scratch.ServeBuckets.toLong)).cast("int"))
-            .write.mode("overwrite").partitionBy("bkt").parquet(dir.getPath)
-        dir.getPath
-      })
-    }
-    s.read.parquet(dir.getPath)
-  }
+  /** [[docSubwords]] staged to parquet once per fixture — the relation
+    * a PER-MICRO-BATCH consumer (st28's RAG serving) joins against:
+    * re-tokenizing the corpus per batch would be a corpus scan per
+    * trigger, the anti-pattern the staged artifacts exist to retire.
+    * Bucket-partitioned by doc_id: st28's per-trigger neighbor resolve
+    * routes its batch's buckets into the scan as PartitionFilters (the
+    * point-lookup serving layout). */
+  private[graft] def stagedDocStats(s: SparkSession, d: String): DataFrame =
+    Scratch.stagedParquet(s, d, "bpe_docstats", partCols = Seq("bkt"))(
+      docSubwords(s, d)
+        .withColumn("bkt", pmod(col("doc_id"),
+          lit(Scratch.ServeBuckets.toLong)).cast("int")))
 
   /** The resolved per-token id stream under the shipped vocab —
     * (doc_id, pos = word position, k = symbol position within the word,

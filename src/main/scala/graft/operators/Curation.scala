@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** The end-to-end training-data curation pipeline, composed from the
   * library's own operators THROUGH their public registries — the
@@ -627,51 +627,21 @@ object Curation {
     cleanedScoredOf(blocksDf, kept).localCheckpoint()
   }
 
-  /** The funnel's STAGED artifacts (write-once per (app, fixture), the
-    * stagedClusters discipline): the paragraph drop set and the
-    * content-key canonical map — the two corpus-wide relations the
-    * streaming funnel leg (st32) probes per micro-batch instead of
-    * recomputing per trigger. */
-  private val stagedFunnelDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stagedFunnel(s: SparkSession, d: String, tag: String,
-      partCols: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedFunnelDirs.synchronized {
-      stagedFunnelDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists()) {
-          val w = build.write.mode("overwrite")
-          (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-            .parquet(dir.getPath)
-        }
-        graft.sources.Pinned.commit(dir): Unit
-        dir.getPath
-      })
-    }
-    // SERVING READS ARE MANIFEST-PINNED (graft.sources.Pinned): the
-    // per-trigger consumers (st28's doc resolve, st32's funnel probes)
-    // scan exactly the last committed snapshot's file set, so a future
-    // artifact refresh publishing concurrently with a trigger can
-    // never hand the probe a torn directory. basePath keeps the bkt
-    // partition column and the routed partition pruning identical to
-    // the directory read.
-    graft.sources.Pinned.read(s, dir)
-  }
-
   /** Serving-artifact bucket width (Scratch.ServeBuckets). Every staged
     * relation a per-trigger probe touches is PARTITIONED by a key-
     * derived bucket so the probe prunes to its keys' directories —
     * unpartitioned, each trigger would scan the corpus-scale artifact
     * end-to-end (the round-7 verdict's serving-leg finding). */
-  private val B = graft.sources.Scratch.ServeBuckets
+  private val B = Scratch.ServeBuckets
+  /** The funnel's staged paragraph drop set and content-key canonical
+    * map — the two corpus-wide relations the streaming funnel leg
+    * (st32) probes per micro-batch instead of recomputing per trigger. */
   private[graft] def stagedDropSet(s: SparkSession, d: String): DataFrame =
-    stagedFunnel(s, d, "funnel_drop", partCols = Seq("bkt"))(
+    Scratch.stagedParquet(s, d, "funnel_drop", partCols = Seq("bkt"))(
       dropSetOf(bhOf(webBlocks(s, d)))
         .withColumn("bkt", pmod(col("bh"), lit(B)).cast("int")))
   private[graft] def stagedCanon(s: SparkSession, d: String): DataFrame =
-    stagedFunnel(s, d, "funnel_canon", partCols = Seq("bkt"))(
+    Scratch.stagedParquet(s, d, "funnel_canon", partCols = Seq("bkt"))(
       webScored(s, d).filter(col("q") >= 0.5)
         .withColumn("ck", md5(col("txt")))
         .groupBy(col("ck")).agg(min(col("doc_id")).as("canon_id"))
@@ -685,7 +655,7 @@ object Curation {
     * broadcast-build job per trigger); a serving path wants exactly one
     * lookup table. */
   private[graft] def stagedDocServe(s: SparkSession, d: String): DataFrame =
-    stagedFunnel(s, d, "docserve", partCols = Seq("bkt"))(
+    Scratch.stagedParquet(s, d, "docserve", partCols = Seq("bkt"))(
       Bpe.docSubwords(s, d).select(col("doc_id"), col("n_subwords"))
         .join(Tables.documents(s, d).select(col("doc_id"), col("text")),
           Seq("doc_id"))

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 import scala.collection.concurrent.TrieMap
 
 /** Deduplication operators (SURVEY.md §2.5) over `documents`/`embeddings`.
@@ -153,28 +153,11 @@ object Dedup {
     * tokenize→shingle→hash pipeline twice doubles the dominant cost, so
     * a corpus-scale curation run materializes the index to storage once
     * and every branch scans the parquet (with pushdown/pruning) instead
-    * of re-deriving it. Keyed by (application, fixture, n, form) — the
-    * content is deterministic, and scoping to the app id keeps a crashed
-    * run's partial write from poisoning later JVMs. The double-checked
-    * cache means one write per process; the _SUCCESS probe makes the
-    * lock idempotent. */
-  private val stagedGramDirs = TrieMap.empty[String, String]
+    * of re-deriving it. Keyed by (application, fixture, n, form). */
   private def stagedGramForm(
       s: SparkSession, d: String, n: Int, form: String)(
-      build: => DataFrame): DataFrame = {
-    graft.sources.Scratch.cleanupStale(s) // reap prior JVMs' artifacts
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_gram_idx_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_") + s"_$n$form")
-    stagedGramDirs.synchronized {
-      stagedGramDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists())
-          build.write.mode("overwrite").parquet(dir.getPath)
-        dir.getPath
-      })
-    }
-    s.read.parquet(dir.getPath)
-  }
+      build: => DataFrame): DataFrame =
+    Scratch.stagedParquet(s, d, s"gram_idx_$n$form")(build)
   /** Hashed staged gram index (form "h") — the only staged form in use:
     * every consumer probes by 8-byte gram hash (text-form staging was
     * retired when ta10/ta20 went hashed; [[gramStrings]] remains for
@@ -612,20 +595,8 @@ object Dedup {
     * there the iterative algorithm IS the thing under test. At 100 TB
     * the cluster relation is exactly this kind of write-once nightly
     * artifact, read by every downstream survivorship pass. */
-  private val stagedClusterDirs = scala.collection.mutable.HashMap.empty[String, String]
-  private[operators] def stagedClusters(s: SparkSession, d: String): DataFrame = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_clusters_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedClusterDirs.synchronized {
-      stagedClusterDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists())
-          clusterLabels(s, d).write.mode("overwrite").parquet(dir.getPath)
-        dir.getPath
-      })
-    }
-    s.read.parquet(dir.getPath)
-  }
+  private[operators] def stagedClusters(s: SparkSession, d: String): DataFrame =
+    Scratch.stagedParquet(s, d, "clusters")(clusterLabels(s, d))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- Exact dedup: group by normalized content, keep the smallest

@@ -192,8 +192,6 @@ object Incremental {
   /** Build audit the spec consumes: the artifact dirs + per-night audits. */
   private[graft] final case class Pl11Audit(dirs: Dirs, nights: Seq[NightAudit])
 
-  private val stagedRuns = TrieMap.empty[String, Pl11Audit]
-
   private def snapshotFiles(root: java.io.File): Map[String, (Long, Long)] =
     Scratch.snapshotTree(root)
 
@@ -1293,13 +1291,11 @@ object Incremental {
   }
 
   private[graft] def pl11Run(s: SparkSession, d: String): Pl11Audit = {
-    val root = new java.io.File(Scratch.dir(s, d, "pl11"))
-    stagedRuns.synchronized {
-      stagedRuns.getOrElseUpdate(root.getPath, {
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("text"))
-        runIncremental(s, docs, root.getPath, Seq(Parts - 2, Parts - 1))
-      })
+    val root = Scratch.dir(s, d, "pl11")
+    Scratch.memo(root) {
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("text"))
+      runIncremental(s, docs, root, Seq(Parts - 2, Parts - 1))
     }
   }
 
@@ -1330,27 +1326,23 @@ object Incremental {
   private[graft] final case class Pl12Audit(
     dirs: Dirs, night: NightAudit, purge: PurgeAudit)
 
-  private val stagedPurgeRuns = TrieMap.empty[String, Pl12Audit]
-
   /** pl12's staged lifecycle: base build (all shards but the last),
     * one delta night (the last shard — the purge must run against
     * artifacts a night already touched, the stale-side-artifact rot
     * point), then the takedown purge. */
   private[graft] def pl12Run(s: SparkSession, d: String): Pl12Audit = {
-    val root = new java.io.File(Scratch.dir(s, d, "pl12"))
-    stagedPurgeRuns.synchronized {
-      stagedPurgeRuns.getOrElseUpdate(root.getPath, {
-        val dirs = Dirs(root.getPath)
-        val docs = Tables.documents(s, d)
-          .select(col("doc_id"), col("lang"), col("text"))
-        val p = Parts - 1
-        baseBuild(s, dirs, docs.filter(partOf(col("doc_id")) =!= p))
-        val night = nightOf(s, dirs, docs.filter(partOf(col("doc_id")) === p), p)
-        val purge = purgeNightOf(s, dirs,
-          docs.filter(pmod(col("doc_id"), lit(PurgeMod.toLong)) === PurgeRem)
-            .select(col("doc_id")))
-        Pl12Audit(dirs, night, purge)
-      })
+    val root = Scratch.dir(s, d, "pl12")
+    Scratch.memo(root) {
+      val dirs = Dirs(root)
+      val docs = Tables.documents(s, d)
+        .select(col("doc_id"), col("lang"), col("text"))
+      val p = Parts - 1
+      baseBuild(s, dirs, docs.filter(partOf(col("doc_id")) =!= p))
+      val night = nightOf(s, dirs, docs.filter(partOf(col("doc_id")) === p), p)
+      val purge = purgeNightOf(s, dirs,
+        docs.filter(pmod(col("doc_id"), lit(PurgeMod.toLong)) === PurgeRem)
+          .select(col("doc_id")))
+      Pl12Audit(dirs, night, purge)
     }
   }
 
@@ -1388,7 +1380,7 @@ object Incremental {
   //
   // Scope note — estate vs per-process cache: the fixture harness's
   // (app, fixture)-scoped staged artifacts (Dedup.stagedGrams,
-  // Curation.stagedFunnel, the staged indexes) are CACHES — they die
+  // Curation.stagedDropSet, the staged indexes) are CACHES — they die
   // with the process and rebuild from the source tables, so purging
   // the source purges them by construction on next build. What a
   // deployment must purge IN PLACE is the DURABLE estate: the
@@ -1655,20 +1647,16 @@ object Incremental {
     }
   }
 
-  private val stagedEstateRuns = TrieMap.empty[String, EstateAudit]
-
   /** pl15's staged lifecycle: estate build over the full corpus, then
     * the estate purge at pl12's predicate. Memoized per (app, fixture). */
   private[graft] def pl15Run(s: SparkSession, d: String): EstateAudit = {
-    val root = new java.io.File(Scratch.dir(s, d, "pl15"))
-    stagedEstateRuns.synchronized {
-      stagedEstateRuns.getOrElseUpdate(root.getPath, {
-        val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        estateBuild(s, root.getPath, docs)
-        estatePurge(s, root.getPath,
-          docs.filter(pmod(col("doc_id"), lit(PurgeMod.toLong)) === PurgeRem)
-            .select(col("doc_id")))
-      })
+    val root = Scratch.dir(s, d, "pl15")
+    Scratch.memo(root) {
+      val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
+      estateBuild(s, root, docs)
+      estatePurge(s, root,
+        docs.filter(pmod(col("doc_id"), lit(PurgeMod.toLong)) === PurgeRem)
+          .select(col("doc_id")))
     }
   }
 

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Decoded-media metadata row produced by the fake decoder (mm02). */
 final case class DecodedMeta(
@@ -188,25 +188,11 @@ object Multimodal {
     * and mm12 (takedown propagation) both consume the same component
     * resolution, so the iterative componentsOf loop runs ONCE per
     * fixture and each consumer probes the parquet. */
-  private val stagedPhashClusterDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def stagedPhashClusters(
-      s: SparkSession, d: String): DataFrame = {
-    graft.sources.Scratch.cleanupStale(s)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_phashclusters_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedPhashClusterDirs.synchronized {
-      stagedPhashClusterDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists())
-          Dedup.componentsOf(queries("mm09_phash_neardup")(s, d)
-              .select(col("doc_a"), col("doc_b")))
-            .write.mode("overwrite").parquet(dir.getPath)
-        dir.getPath
-      })
-    }
-    s.read.parquet(dir.getPath)
-  }
+      s: SparkSession, d: String): DataFrame =
+    Scratch.stagedParquet(s, d, "phashclusters")(
+      Dedup.componentsOf(queries("mm09_phash_neardup")(s, d)
+        .select(col("doc_a"), col("doc_b"))))
 
   /** mm10's wide 60-bit gradient phash per doc as DuckDB SQL
     * (doc_id, phash), source-parameterized — the pl15 band-ledger

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.sources.Tables
+import graft.sources.{Pinned, Scratch, Tables}
 import graft.functions.VectorFunctions.vecDot
 
 /** Similarity-search operators (SURVEY.md §2.5) over `embeddings`
@@ -80,40 +80,14 @@ object Similarity {
       .agg(sum(expr("if(dot > 0, shiftleft(cast(1 as bigint), p), cast(0 as bigint))")).as("sig"))
   }
 
-  /** Persisted index artifacts — the build/probe split (write the
-    * structure to parquet ONCE per (application, fixture), every probe
-    * scans the files) shared by the LSH (ss07), IVF (ss02) and PQ (ss09)
-    * tiers. Same double-checked staging discipline as Dedup.stagedGrams:
-    * the content is deterministic, the _SUCCESS probe makes the lock
-    * idempotent, and scoping to the app id keeps a crashed run's partial
-    * write from poisoning later JVMs. `partCols` lays the artifact out
-    * partitioned (the IVF index is partitioned BY CELL, so a probe of
-    * one cell reads one directory — the on-disk meaning of an inverted
-    * file). */
-  private val stagedIdxDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def stagedIndex(s: SparkSession, d: String, tag: String,
-      partCols: Seq[String] = Nil)(build: => DataFrame): DataFrame = {
-    graft.sources.Scratch.cleanupStale(s) // reap prior JVMs' artifacts
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedIdxDirs.synchronized {
-      stagedIdxDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists()) {
-          val w = build.write.mode("overwrite")
-          (if (partCols.nonEmpty) w.partitionBy(partCols: _*) else w)
-            .parquet(dir.getPath)
-        }
-        dir.getPath
-      })
-    }
-    s.read.parquet(dir.getPath)
-  }
+  // Persisted index artifacts — the build/probe split (write the
+  // structure to parquet ONCE per (application, fixture), every probe
+  // scans the files) shared by the LSH (ss07), IVF (ss02) and PQ (ss09)
+  // tiers, each staged through Scratch.stagedParquet.
 
   /** ss07's persisted index: [[lshSignatures]] staged per fixture. */
   private def lshIndex(s: SparkSession, d: String): DataFrame =
-    stagedIndex(s, d, "lsh_idx")(lshSignatures(s, d))
+    Scratch.stagedParquet(s, d, "lsh_idx")(lshSignatures(s, d))
 
   /** ss02's persisted IVF index: the corpus laid out partitioned by cell
     * (vector + norm stored WITH the cell so a probe never recomputes
@@ -122,7 +96,7 @@ object Similarity {
     * `private[graft]`: st22 (streaming ANN serving) probes the SAME
     * artifact per micro-batch. */
   private[graft] def ivfIndex(s: SparkSession, d: String): DataFrame =
-    stagedIndex(s, d, "ivf_idx", partCols = Seq("label"))(
+    Scratch.stagedParquet(s, d, "ivf_idx", partCols = Seq("label"))(
       vecs(s, d).select(col("vec_id"), col("e"), col("nrm"), col("label")))
 
   /** Shared same-cell top-3 IVF probe (ss02 / ss12 / st22): a prepared
@@ -177,8 +151,7 @@ object Similarity {
     * per-cell rewrite that removes the accumulated small files without
     * changing content (fixture cells degenerate to one file). Returns
     * (pre-compaction dir, compacted dir); probes read the compacted
-    * artifact. Build runs once per (application, fixture) under the
-    * same double-checked staging lock as every other index. */
+    * artifact. */
   /** Budgeted per-cell compaction (ss12 / st24's [[graft.streaming
     * Streams.indexCompact]]): rewrite each cell directory into
     * ceil(cellRows / rowsPerFile) files. The naive `repartition(cell)`
@@ -217,25 +190,17 @@ object Similarity {
   }
 
   private[graft] def ivfRefreshedDirs(s: SparkSession, d: String): (String, String) = {
-    graft.sources.Scratch.cleanupStale(s)
-    val slug = s.sparkContext.applicationId + "_" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-    val raw = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_ivf_rf_$slug")
-    val compacted = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_ivf_rfc_$slug")
-    stagedIdxDirs.synchronized {
-      stagedIdxDirs.getOrElseUpdate(compacted.getPath, {
-        if (!new java.io.File(compacted, "_SUCCESS").exists()) {
-          val all = vecs(s, d).select(col("vec_id"), col("e"), col("nrm"), col("label"))
-          all.filter(col("vec_id") % 2 === 0)
-            .write.mode("overwrite").partitionBy("label").parquet(raw.getPath)
-          all.filter(col("vec_id") % 2 =!= 0)
-            .write.mode("append").partitionBy("label").parquet(raw.getPath)
-          compactCells(s.read.parquet(raw.getPath), compacted.getPath)
-        }
-        compacted.getPath
-      })
+    val raw = Scratch.dir(s, d, "ivf_rf")
+    val compacted = Scratch.staged(s, d, "ivf_rfc") { f =>
+      val all = vecs(s, d).select(col("vec_id"), col("e"), col("nrm"), col("label"))
+      all.filter(col("vec_id") % 2 === 0)
+        .write.mode("overwrite").partitionBy("label").parquet(raw)
+      all.filter(col("vec_id") % 2 =!= 0)
+        .write.mode("append").partitionBy("label").parquet(raw)
+      compactCells(s.read.parquet(raw), f.getPath)
+      Pinned.commit(f): Unit
     }
-    (raw.getPath, compacted.getPath)
+    (raw, compacted.getPath)
   }
 
   /** ss15's staged state + compaction audit: the managed index dir
@@ -271,38 +236,30 @@ object Similarity {
     * and the staged dir pair — extracted so ss15 and the composed
     * cross-modality takedown (pl13) run the SAME vector purge path
     * verbatim, each against its own staged copy of the index. Memoized
-    * per live dir (the write-once staging lock every index uses). */
+    * per live dir. */
   private[graft] def ivfDeleteRun(s: SparkSession, tag: String, d: String,
       tombPred: org.apache.spark.sql.Column): DeleteAudit = {
-    graft.sources.Scratch.cleanupStale(s)
-    val slug = s.sparkContext.applicationId + "_" +
-      d.replaceAll("[^A-Za-z0-9]", "_")
-    val live = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ivf_${tag}_$slug")
-    val tomb = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_ivf_${tag}t_$slug")
-    def snapshot(root: java.io.File): Map[String, (Long, Long)] =
-      graft.sources.Scratch.snapshotTree(root)
-    stagedDelAudits.synchronized {
-      stagedDelAudits.getOrElseUpdate(live.getPath, {
-        val all = vecs(s, d).select(col("vec_id"), col("e"), col("nrm"), col("label"))
-        all.write.mode("overwrite").partitionBy("label").parquet(live.getPath)
-        graft.sources.Pinned.commit(live): Unit // v1 — compactions bump it
-        // The tombstone relation stays IN MEMORY for the compaction and
-        // the audit: an empty predicate's partitioned write produces no
-        // data files, and reading such a dir back fails schema
-        // inference — the kernel must degrade to a no-op delete, not
-        // abort the run. The parquet ledger is still written (the
-        // merge-on-read consumers and specs probe it).
-        val tombRel = all.filter(tombPred)
-          .select(col("vec_id"), col("label")).localCheckpoint()
-        tombRel.write.mode("overwrite").partitionBy("label").parquet(tomb.getPath)
-        val pre = snapshot(live)
-        deleteCompactCells(s, live.getPath, tombRel)
-        val affected = tombRel.select(col("label")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted
-        DeleteAudit(live.getPath, tomb.getPath, affected, pre, snapshot(live))
-      })
+    val live = Scratch.dir(s, d, s"ivf_$tag")
+    val tomb = Scratch.dir(s, d, s"ivf_${tag}t")
+    Scratch.memo(live) {
+      val all = vecs(s, d).select(col("vec_id"), col("e"), col("nrm"), col("label"))
+      all.write.mode("overwrite").partitionBy("label").parquet(live)
+      Pinned.commit(new java.io.File(live)): Unit // v1 — compactions bump it
+      // The tombstone relation stays IN MEMORY for the compaction and
+      // the audit: an empty predicate's partitioned write produces no
+      // data files, and reading such a dir back fails schema
+      // inference — the kernel must degrade to a no-op delete, not
+      // abort the run. The parquet ledger is still written (the
+      // merge-on-read consumers and specs probe it).
+      val tombRel = all.filter(tombPred)
+        .select(col("vec_id"), col("label")).localCheckpoint()
+      tombRel.write.mode("overwrite").partitionBy("label").parquet(tomb)
+      val pre = Scratch.snapshotTree(new java.io.File(live))
+      deleteCompactCells(s, live, tombRel)
+      val affected = tombRel.select(col("label")).distinct()
+        .collect().map(_.getInt(0)).toSeq.sorted
+      DeleteAudit(live, tomb, affected, pre,
+        Scratch.snapshotTree(new java.io.File(live)))
     }
   }
 
@@ -324,7 +281,7 @@ object Similarity {
     * affected cell ids (a ≤cell-count driver scalar). */
   private[graft] def deleteCompactCells(
       s: SparkSession, live: String, tomb: DataFrame): Seq[Int] = {
-    import graft.sources.Scratch.deleteRec
+    import Scratch.deleteRec
     // RECOVERY FIRST: a _SUCCESS-marked staging is a COMMITTED
     // compaction — its cell dirs are the truth for every cell they
     // hold, so complete the interrupted swap before computing anything.
@@ -367,13 +324,10 @@ object Similarity {
       // listing — a probe racing the cell swaps resolves a consistent
       // pre- or post-compaction snapshot through Pinned instead of a
       // torn cell mix (Incremental.publishManifest's discipline).
-      graft.sources.Pinned.commit(new java.io.File(live)): Unit
+      Pinned.commit(new java.io.File(live)): Unit
       affected
     }
   }
-
-  private val stagedDelAudits =
-    scala.collection.concurrent.TrieMap.empty[String, DeleteAudit]
 
   /** The merge-on-read serving form (phase 1, pre-compaction): probe an
     * index that still CONTAINS tombstoned rows with the ledger
@@ -396,7 +350,7 @@ object Similarity {
     * scores the pairs; float arrays roundtrip parquet exactly, so the
     * staged scores are bit-identical to the inline form. */
   private def sq8Index(s: SparkSession, d: String): DataFrame =
-    stagedIndex(s, d, "sq8_idx")(
+    Scratch.stagedParquet(s, d, "sq8_idx")(
       vecs(s, d).select(col("vec_id"), expr(
         "transform(e, x -> cast(greatest(-127.0D, least(127.0D, " +
         "round(cast(x as double) * 127))) as float))").as("qe")))
@@ -415,7 +369,7 @@ object Similarity {
     * a one-time KB-scale setup cost; `label` is stored in both and
     * parquet column pruning makes it free to readers that skip it. */
   private def quantVecs(s: SparkSession, d: String, offset: Int): DataFrame =
-    stagedIndex(s, d, s"kmq$offset")(
+    Scratch.stagedParquet(s, d, s"kmq$offset")(
       Tables.embeddings(s, d).select(col("vec_id"), col("label"),
         expr("transform(embedding, x -> cast(round(cast(x as double) * 1000, 0) as bigint)" +
           s" + $offset)").as("v")))
@@ -577,7 +531,7 @@ object Similarity {
     * refine it). Tiny, but stored so probes and re-encodes share ONE
     * codebook artifact — the consistency contract PQ requires. */
   private def pqCodebook(s: SparkSession, d: String): DataFrame =
-    stagedIndex(s, d, "pq_codes")(
+    Scratch.stagedParquet(s, d, "pq_codes")(
       pqSubv(s, d).filter(col("vec_id") < pqK)
         .select(col("sp"), col("vec_id").cast("int").as("code"), col("sv").as("cv")))
 
@@ -585,7 +539,7 @@ object Similarity {
     * m=4 sub-space codes — the expensive full-corpus argmin-encode runs
     * ONCE at build; probes scan 4 small ints per vector, never vectors. */
   private def pqEncoded(s: SparkSession, d: String): DataFrame =
-    stagedIndex(s, d, "pq_enc") {
+    Scratch.stagedParquet(s, d, "pq_enc") {
       val codes = pqCodebook(s, d)
       pqSubv(s, d).join(broadcast(codes), "sp")
         .select(col("vec_id"), col("sp"), col("code"),
@@ -659,7 +613,7 @@ object Similarity {
     "ss12_ivf_refresh" -> ((s, d) => {
       val (_, compacted) = ivfRefreshedDirs(s, d)
       ivfProbe(vecs(s, d).filter(col("vec_id") % 50 === 0),
-        s.read.parquet(compacted))
+        Pinned.read(s, new java.io.File(compacted)))
     }),
 
     // -- INDEX DELETE lifecycle ([[ivfDeleted]]): tombstone-ledger
@@ -673,7 +627,7 @@ object Similarity {
     "ss15_ivf_delete_compact" -> ((s, d) => {
       val audit = ivfDeleted(s, d)
       ivfProbe(vecs(s, d).filter(col("vec_id") % 50 === 0),
-        s.read.parquet(audit.live))
+        Pinned.read(s, new java.io.File(audit.live)))
     }),
 
     // -- LSH ANN, multi-table + multi-probe: L=4 independent tables of

@@ -1,11 +1,9 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.sources.Tables
+import graft.sources.{Scratch, Tables}
 
 /** Text-analysis operators (SURVEY.md §2.5) over the `documents` table.
   *
@@ -110,27 +108,15 @@ object TextAnalysis {
     * consumer (st30's streaming diversity sampling) joins against:
     * recomputing the corpus quality aggregation per trigger would be a
     * corpus scan per batch. */
-  private val stagedQualDirs = TrieMap.empty[String, String]
-  private[graft] def stagedQuality(s: SparkSession, d: String): DataFrame = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qual_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedQualDirs.synchronized {
-      stagedQualDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists())
-          // Bucket-partitioned by doc_id (Scratch.ServeBuckets): the
-          // per-trigger consumer (st30) routes its batch's buckets into
-          // the scan as PartitionFilters instead of reading the whole
-          // corpus-sized relation every micro-batch.
-          qualityOf(Tables.documents(s, d))
-            .withColumn("bkt", pmod(col("doc_id"),
-              lit(graft.sources.Scratch.ServeBuckets.toLong)).cast("int"))
-            .write.mode("overwrite").partitionBy("bkt").parquet(dir.getPath)
-        dir.getPath
-      })
-    }
-    s.read.parquet(dir.getPath)
-  }
+  private[graft] def stagedQuality(s: SparkSession, d: String): DataFrame =
+    // Bucket-partitioned by doc_id (Scratch.ServeBuckets): the
+    // per-trigger consumer (st30) routes its batch's buckets into the
+    // scan as PartitionFilters instead of reading the whole
+    // corpus-sized relation every micro-batch.
+    Scratch.stagedParquet(s, d, "qual", partCols = Seq("bkt"))(
+      qualityOf(Tables.documents(s, d))
+        .withColumn("bkt", pmod(col("doc_id"),
+          lit(Scratch.ServeBuckets.toLong)).cast("int")))
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- Token statistics: counts + average token length. Narrow (no
@@ -946,26 +932,13 @@ object TextAnalysis {
     * write-once per (application, fixture), probed by the df branch and
     * the reassembly branch (dd18's staged-gram-index discipline). Only
     * 8-byte hashes and integer positions hit storage or any exchange. */
-  private val stagedLineDirs = TrieMap.empty[String, String]
-  private[graft] def lineIndex(s: SparkSession, d: String): DataFrame = {
-    graft.sources.Scratch.cleanupStale(s)
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_line_idx_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedLineDirs.synchronized {
-      stagedLineDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists())
-          linedDocs(s, d)
-            .select(col("doc_id"), posexplode(col("lines")).as(Seq("idx", "line")))
-            .select(col("doc_id"), col("idx"),
-              expr("cast(conv(substring(md5(line), 1, 15), 16, 10) as bigint)")
-                .as("lh"))
-            .write.mode("overwrite").parquet(dir.getPath)
-        dir.getPath
-      })
-    }
-    s.read.parquet(dir.getPath)
-  }
+  private[graft] def lineIndex(s: SparkSession, d: String): DataFrame =
+    Scratch.stagedParquet(s, d, "line_idx")(
+      linedDocs(s, d)
+        .select(col("doc_id"), posexplode(col("lines")).as(Seq("idx", "line")))
+        .select(col("doc_id"), col("idx"),
+          expr("cast(conv(substring(md5(line), 1, 15), 16, 10) as bigint)")
+            .as("lh")))
 
   /** Shared ta15/ta16 histogram machinery: 26 replace-trick letter
     * counts (`cs`) + an "other" bin (`cs2`), each level lambda-bound

@@ -69,9 +69,8 @@ object PipelineQueries {
       // CPU width (the st12/st13 discipline — 32 shards × 2 queries of
       // store lifecycle dominated the trigger).
       val s = graft.streaming.Streams.stateTuned(s0)
-      val tmp = System.getProperty("java.io.tmpdir")
-      val outA = s"$tmp/graft_pp02_by_type"
-      val outB = s"$tmp/graft_pp02_by_user"
+      val outA = graft.sources.Scratch.dir(s, d, "pp02_by_type")
+      val outB = graft.sources.Scratch.dir(s, d, "pp02_by_user")
       Seq(outA, outB).foreach { dir =>
         val p = new org.apache.hadoop.fs.Path(dir)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
@@ -107,9 +106,8 @@ object PipelineQueries {
     }),
 
     "pp01_fanout_diamond" -> ((s, d) => {
-      val tmp = System.getProperty("java.io.tmpdir")
-      val outA = s"$tmp/graft_pp01_by_source"
-      val outB = s"$tmp/graft_pp01_by_lang"
+      val outA = graft.sources.Scratch.dir(s, d, "pp01_by_source")
+      val outB = graft.sources.Scratch.dir(s, d, "pp01_by_lang")
       Seq(outA, outB).foreach { dir =>
         val p = new org.apache.hadoop.fs.Path(dir)
         p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)

@@ -93,49 +93,28 @@ object FormatsIO {
     * nothing can split (a 100 TB scan has thousands of splits, so this
     * never binds in production — learned by measurement here). Staged
     * once per (app, fixture), io09's build/probe discipline. */
-  private val stagedSkewDirs = scala.collection.mutable.HashMap.empty[String, String]
-  private def stagedSkewFact(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_io13_fact_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedSkewDirs.synchronized {
-      stagedSkewDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists()) {
-          Tables.lineitem(s, d)
-            .select(when(col("l_orderkey") % 3 === 0, 0L)
-              .otherwise(col("l_orderkey")).as("k"),
-              col("l_extendedprice"))
-            .repartition(16)
-            .write.mode("overwrite").parquet(dir.getPath)
-        }
-        dir.getPath
-      })
-    }
-    dir.getPath
-  }
+  private def stagedSkewFact(s: SparkSession, d: String): String =
+    Scratch.staged(s, d, "io13_fact") { f =>
+      Tables.lineitem(s, d)
+        .select(when(col("l_orderkey") % 3 === 0, 0L)
+          .otherwise(col("l_orderkey")).as("k"),
+          col("l_extendedprice"))
+        .repartition(16)
+        .write.mode("overwrite").parquet(f.getPath)
+    }.getPath
 
   /** io09's day-partitioned fact table, staged ONCE per (app, fixture) —
     * the q42/ss07 build/probe discipline: the timed query measures the
     * dynamically-pruned JOIN, not the layout build (a nightly job in
     * production). The io01-03/07/08 round-trips keep their writes in
     * the query on purpose — there the SINK is the capability. */
-  private val stagedFactDirs = scala.collection.mutable.HashMap.empty[String, String]
-  private def stagedFactByDay(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_io09_fact_" + s.sparkContext.applicationId + "_" +
-        d.replaceAll("[^A-Za-z0-9]", "_"))
-    stagedFactDirs.synchronized {
-      stagedFactDirs.getOrElseUpdate(dir.getPath, {
-        if (!new java.io.File(dir, "_SUCCESS").exists()) {
-          Tables.events(s, d)
-            .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
-            .select(col("event_id"), col("event_type"), col("value"), col("day"))
-            .write.mode("overwrite").partitionBy("day").parquet(dir.getPath)
-        }
-        dir.getPath
-      })
-    }
-  }
+  private def stagedFactByDay(s: SparkSession, d: String): String =
+    Scratch.staged(s, d, "io09_fact") { f =>
+      Tables.events(s, d)
+        .withColumn("day", date_format(col("ts"), "yyyy-MM-dd"))
+        .select(col("event_id"), col("event_type"), col("value"), col("day"))
+        .write.mode("overwrite").partitionBy("day").parquet(f.getPath)
+    }.getPath
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- CSV sink + source: orders key columns through header CSV.

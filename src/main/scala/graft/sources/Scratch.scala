@@ -1,11 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.File
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicBoolean
 
 /** Scratch-directory discipline for every on-disk artifact the library
   * stages under java.io.tmpdir (io-query round-trip dirs, streaming
-  * sink-as-state dirs, staged gram/feed/index artifacts).
+  * sink-as-state dirs, staged gram/feed/index artifacts). This object is
+  * the only reader of java.io.tmpdir.
   *
   * Two rules, both learned the hard way:
   *
@@ -23,13 +26,32 @@ import java.util.concurrent.atomic.AtomicBoolean
   *     to a DIFFERENT application and have not been touched for an hour
   *     — old enough that a live concurrent process (whose artifacts are
   *     minutes old) is never raced.
+  *
+  * **Staging rule.** A write-once artifact (an index, dictionary, feed
+  * or drop set written once per (application, fixture) and then probed
+  * by many queries and micro-batches) is built only through [[staged]]
+  * or [[stagedParquet]]:
+  *   - scope: its dir is [[dir]]`(s, d, tag)`, named `graft_<tag>_…`;
+  *   - reap: deriving that dir runs rule 2;
+  *   - memo: one per-process [[memo]] runs the build at most once per
+  *     (application, fixture, tag);
+  *   - marker gate: `_SUCCESS` is written only after the build returns,
+  *     and a dir without it is a crashed build, rebuilt from empty;
+  *   - pinned commit: a parquet artifact's listing is committed with
+  *     [[Pinned.commit]] before its marker, and queries read it only
+  *     through [[Pinned.read]].
+  * Artifacts consumed as directories (stream feeds, io09/io13's layout
+  * demos) use [[staged]] alone.
   */
 object Scratch {
 
   private val cleaned = new AtomicBoolean(false)
   private val StaleAfterMs = 60L * 60L * 1000L
 
-  private def tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+  /** The scratch root (java.io.tmpdir). Paths under it come from [[dir]];
+    * the root itself is for roots that carry their own scoping (the
+    * streaming checkpoint fallback). */
+  private[graft] def tmpRoot = new File(System.getProperty("java.io.tmpdir"))
 
   /** Recursive delete — THE shared file-tree removal helper (like
     * [[snapshotTree]], one definition for every staged-artifact
@@ -61,10 +83,54 @@ object Scratch {
     * caller owns the lifecycle (overwrite / delete-then-append). */
   def dir(s: SparkSession, d: String, tag: String): String = {
     cleanupStale(s)
-    new java.io.File(tmpRoot,
+    new File(tmpRoot,
       s"graft_${tag}_" + s.sparkContext.applicationId + "_" +
         d.replaceAll("[^A-Za-z0-9]", "_")).getPath
   }
+
+  /** A value computed at most once; a build that throws is retried by
+    * the next caller. The thunk is dropped once it has run, so the memo
+    * holds only results, never the plans the build closed over. */
+  private final class Once(private var build: () => Any) {
+    lazy val value: Any = { val v = build(); build = null; v }
+  }
+  private val memos = new ConcurrentHashMap[String, Once]()
+
+  /** THE per-process memo for staged state keyed by a scratch dir path:
+    * `build` runs at most once per key, concurrent callers of that key
+    * wait for it, and callers of other keys never do. */
+  def memo[T](key: String)(build: => T): T = {
+    val fresh = new Once(() => build)
+    val once = Option(memos.putIfAbsent(key, fresh)).getOrElse(fresh)
+    once.value.asInstanceOf[T]
+  }
+
+  /** Stage a write-once artifact: `write` fills the (empty, existing)
+    * dir once per (application, fixture, tag), then `_SUCCESS` marks it
+    * complete. A failed `write` leaves no dir behind. */
+  def staged(s: SparkSession, d: String, tag: String)(write: File => Unit): File = {
+    val f = new File(dir(s, d, tag))
+    memo(f.getPath) {
+      val marker = new File(f, "_SUCCESS")
+      if (!marker.exists()) {
+        deleteRec(f)
+        f.mkdirs()
+        try write(f)
+        catch { case e: Throwable => deleteRec(f); throw e }
+        marker.createNewFile(): Unit
+      }
+      f
+    }
+  }
+
+  /** [[staged]] for a parquet artifact: write `build` (partitioned by
+    * `partCols`), commit its listing, and return the pinned read. */
+  def stagedParquet(s: SparkSession, d: String, tag: String,
+      partCols: Seq[String] = Nil)(build: => DataFrame): DataFrame =
+    Pinned.read(s, staged(s, d, tag) { f =>
+      build.write.mode("overwrite").partitionBy(partCols: _*).parquet(f.getPath)
+      Pinned.commit(f): Unit
+    })
 
   /** Bucket width for KEY-PARTITIONED staged serving artifacts (funnel
     * drop set / canonical map, BPE dict / doc stats, doc text, quality):
@@ -76,13 +142,6 @@ object Scratch {
     * thousands so a trigger's probe reads a corpus FRACTION. */
   val ServeBuckets = 32
 
-  /** Static bucket routing (st22's cell-routing discipline): restrict a
-    * bucket-partitioned staged artifact to the buckets a BATCH-BOUNDED
-    * probe touches. The collected bucket list is ≤ [[ServeBuckets]]
-    * ints (the documented bounded-scalar class, like st22's cell list)
-    * and becomes a static IN over the artifact's partition column —
-    * planning-time directory pruning (PartitionFilters), so a trigger's
-    * artifact read is O(touched buckets), never O(artifact). */
   /** File-tree snapshot for rewrite AUDITS (pl11's night audit, ss15's
     * delete compaction): relative path → (length, mtime) for every data
     * file under `root`, hidden files and _SUCCESS markers excluded.
@@ -107,6 +166,13 @@ object Scratch {
       .toMap
   }
 
+  /** Static bucket routing (st22's cell-routing discipline): restrict a
+    * bucket-partitioned staged artifact to the buckets a BATCH-BOUNDED
+    * probe touches. The collected bucket list is ≤ [[ServeBuckets]]
+    * ints (the documented bounded-scalar class, like st22's cell list)
+    * and becomes a static IN over the artifact's partition column —
+    * planning-time directory pruning (PartitionFilters), so a trigger's
+    * artifact read is O(touched buckets), never O(artifact). */
   def routeBuckets(artifact: org.apache.spark.sql.DataFrame, bktCol: String,
       probeBkts: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import java.util.concurrent.atomic.AtomicInteger
+import graft.sources.Scratch
 
 /** st12 (transformWithState) processor: per-user distinct event-type
   * count held in a ValueState. The Spark-4 arbitrary-state API —
@@ -156,7 +157,7 @@ object Streams {
     val base = sys.env.get("SPARK_GRAFT_CKPT_DIR").orElse {
       val shm = new java.io.File("/dev/shm")
       if (shm.isDirectory && shm.canWrite) Some("/dev/shm") else None
-    }.getOrElse(System.getProperty("java.io.tmpdir"))
+    }.getOrElse(Scratch.tmpRoot.getPath)
     base
   }
 
@@ -176,7 +177,7 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     try q.awaitTermination()
-    finally graft.sources.Scratch.deleteRec(ckpt) // temp-checkpoint lifecycle
+    finally Scratch.deleteRec(ckpt) // temp-checkpoint lifecycle
     // Release this query's in-memory state (a stream-stream join buffers
     // the whole watermark window); harness runs execute many bounded
     // streaming queries in one JVM and would otherwise hold all of it.
@@ -246,38 +247,19 @@ object Streams {
     graft.operators.Similarity.compactCells(
       s.read.parquet(idxDir).dropDuplicates("vec_id"), dest)
 
-  /** Per-fixture STAGED stream feeds — the multi-batch chronological
-    * file sets the bounded harness streams read. Feed content is pure
-    * fixture scaffolding (production's feed is the arriving data
-    * itself), so it follows the gram-index build-once discipline:
-    * built once per (application, fixture), marker-guarded against a
-    * crashed partial build; [[prepareFeeds]] lets the bench construct
-    * them before the clock starts so timed runs measure the streaming
-    * OPERATOR, not feed construction. st17/st19/pl04 share ONE
-    * documents feed (identical odd/even split). */
-  private val stagedFeedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, java.io.File]
-  private def stagedFeed(s: SparkSession, d: String, tag: String)(
-      build: java.io.File => Unit): java.io.File = {
-    graft.sources.Scratch.cleanupStale(s) // reap prior JVMs' artifacts
-    val key = tag + "|" + s.sparkContext.applicationId + "|" + d
-    stagedFeedDirs.synchronized {
-      stagedFeedDirs.getOrElseUpdate(key, {
-        val feed = new java.io.File(System.getProperty("java.io.tmpdir"),
-          "graft_feed_" + tag + "_" + s.sparkContext.applicationId + "_" +
-            d.replaceAll("[^A-Za-z0-9]", "_"))
-        feed.mkdirs()
-        val marker = new java.io.File(feed, "_FEED_READY")
-        if (!marker.exists()) { build(feed); marker.createNewFile() }
-        feed
-      })
-    }
-  }
+  // Per-fixture STAGED stream feeds — the multi-batch chronological
+  // file sets the bounded harness streams read, staged through
+  // Scratch.staged under a "feed_" tag. Feed content is pure fixture
+  // scaffolding (production's feed is the arriving data itself);
+  // [[prepareFeeds]] lets the bench construct them before the clock
+  // starts so timed runs measure the streaming OPERATOR, not feed
+  // construction. st17/st19/pl04 share ONE documents feed (identical
+  // odd/even split).
 
   private def st06Feed(s: SparkSession, d: String) = {
     val sel = graft.sources.Tables.events(s, d)
       .select(col("ts"), col("event_type"), col("value"))
-    val feed = stagedFeed(s, d, "st06") { f =>
+    val feed = Scratch.staged(s, d, "feed_st06") { f =>
       val ev = sel.persist()
       // One driver-side scalar (the global max event time) places the
       // cutoffs — the streaming plan itself stays fully distributed.
@@ -299,7 +281,7 @@ object Streams {
   private def st14Feed(s: SparkSession, d: String) = {
     val sel = graft.sources.Tables.events(s, d)
       .select(col("ts"), col("user_id"), col("event_type"))
-    val feed = stagedFeed(s, d, "st14") { f =>
+    val feed = Scratch.staged(s, d, "feed_st14") { f =>
       val ev = sel.persist()
       val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
       val split = lit(mx) - expr("INTERVAL 60 MINUTES")
@@ -314,7 +296,7 @@ object Streams {
   private def st16Feed(s: SparkSession, d: String) = {
     val sel = graft.sources.Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-    val feed = stagedFeed(s, d, "st16") { f =>
+    val feed = Scratch.staged(s, d, "feed_st16") { f =>
       val ev = sel.persist()
       val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
       val t0 = System.currentTimeMillis() - 180000
@@ -342,7 +324,7 @@ object Streams {
     * micro-batches in every consumer. */
   private def docsFeed(s: SparkSession, d: String) = {
     val docs = graft.sources.Tables.documents(s, d)
-    val feed = stagedFeed(s, d, "docs2") { f =>
+    val feed = Scratch.staged(s, d, "feed_docs2") { f =>
       val dd = docs.persist()
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, dd.filter(col("doc_id") % 2 === 0), "b1.parquet", t0)
@@ -354,7 +336,7 @@ object Streams {
 
   private def embFeed(s: SparkSession, d: String) = {
     val emb = graft.sources.Tables.embeddings(s, d)
-    val feed = stagedFeed(s, d, "emb2") { f =>
+    val feed = Scratch.staged(s, d, "feed_emb2") { f =>
       val ee = emb.persist()
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, ee.filter(col("vec_id") % 2 === 0), "b1.parquet", t0)
@@ -372,7 +354,7 @@ object Streams {
     val docs = graft.sources.Tables.documents(s, d)
       .select(col("doc_id"), col("lang"), col("text"))
     val P = Incremental.Parts
-    val feed = stagedFeed(s, d, "pl11d") { f =>
+    val feed = Scratch.staged(s, d, "feed_pl11d") { f =>
       val dd = docs.persist()
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f,
@@ -399,47 +381,43 @@ object Streams {
     * a consumer pays. Oracle: pl11's — the full from-scratch recompute
     * over the final corpus, which the streamed nights must converge to
     * exactly. */
-  private val stagedIncRuns =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Incremental.Dirs]
   private def pl11StreamRun(s: SparkSession, d: String): graft.operators.Incremental.Dirs = {
     import graft.operators.Incremental
-    val root = graft.sources.Scratch.dir(s, d, "st35_root")
-    stagedIncRuns.synchronized {
-      stagedIncRuns.getOrElseUpdate(root, {
-        val fsPath = new org.apache.hadoop.fs.Path(root)
-        fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-        val dirs = Incremental.Dirs(root)
-        val P = Incremental.Parts
-        val part = pmod(col("doc_id"), lit(P.toLong)).cast("int")
-        Incremental.baseBuild(s, dirs,
-          graft.sources.Tables.documents(s, d)
-            .select(col("doc_id"), col("lang"), col("text"))
-            .filter(part < P - 2))
-        val (feed, schema) = pl11DeltaFeed(s, d)
-        val q = s.readStream.schema(schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", "1") // one crawl shard per trigger
-          .parquet(feed.toString)
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // Shards present in this trigger — a ≤Parts-int driver
-            // scalar (st22's routing class); processed in shard order
-            // so a combined trigger still applies nights in sequence.
-            val parts = batch.select(part.as("p")).distinct()
-              .collect().map(_.getInt(0)).toSeq.sorted
-            parts.foreach { p =>
-              Incremental.nightIdempotent(s, dirs,
-                batch.filter(part === p), p)
-              ()
-            }
+    val root = Scratch.dir(s, d, "st35_root")
+    Scratch.memo(root) {
+      val fsPath = new org.apache.hadoop.fs.Path(root)
+      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      val dirs = Incremental.Dirs(root)
+      val P = Incremental.Parts
+      val part = pmod(col("doc_id"), lit(P.toLong)).cast("int")
+      Incremental.baseBuild(s, dirs,
+        graft.sources.Tables.documents(s, d)
+          .select(col("doc_id"), col("lang"), col("text"))
+          .filter(part < P - 2))
+      val (feed, schema) = pl11DeltaFeed(s, d)
+      val q = s.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "1") // one crawl shard per trigger
+        .parquet(feed.toString)
+        .writeStream
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // Shards present in this trigger — a ≤Parts-int driver
+          // scalar (st22's routing class); processed in shard order
+          // so a combined trigger still applies nights in sequence.
+          val parts = batch.select(part.as("p")).distinct()
+            .collect().map(_.getInt(0)).toSeq.sorted
+          parts.foreach { p =>
+            Incremental.nightIdempotent(s, dirs,
+              batch.filter(part === p), p)
+            ()
           }
-          .start()
-        q.awaitTermination()
-        org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
-        dirs
-      })
+        }
+        .start()
+      q.awaitTermination()
+      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      dirs
     }
   }
 
@@ -451,7 +429,7 @@ object Streams {
     * (doc_id%16 = 5 → shard 5, doc_id%16 = 9 → shard 1). */
   private def st37PurgeFeed(s: SparkSession, d: String) = {
     val ids = graft.sources.Tables.documents(s, d).select(col("doc_id"))
-    val feed = stagedFeed(s, d, "st37p") { f =>
+    val feed = Scratch.staged(s, d, "feed_st37p") { f =>
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, ids.filter(pmod(col("doc_id"), lit(16L)) === 5),
         "p1.parquet", t0)
@@ -473,45 +451,41 @@ object Streams {
     * replay maps to the same marker and is a structural no-op).
     * Memoized per (app, fixture); oracle = the funnel recompute over
     * the survivors of BOTH purges. */
-  private val stagedPurgeStreams =
-    scala.collection.concurrent.TrieMap.empty[String, graft.operators.Incremental.Dirs]
   private def st37StreamRun(s: SparkSession, d: String): graft.operators.Incremental.Dirs = {
     import graft.operators.Incremental
-    val root = graft.sources.Scratch.dir(s, d, "st37_root")
-    stagedPurgeStreams.synchronized {
-      stagedPurgeStreams.getOrElseUpdate(root, {
-        val fsPath = new org.apache.hadoop.fs.Path(root)
-        fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-        val dirs = Incremental.Dirs(root)
-        Incremental.baseBuild(s, dirs,
-          graft.sources.Tables.documents(s, d)
-            .select(col("doc_id"), col("lang"), col("text")))
-        val (feed, schema) = st37PurgeFeed(s, d)
-        val rem = pmod(col("doc_id"), lit(16L)).cast("int")
-        val q = s.readStream.schema(schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", "1") // one takedown batch per trigger
-          .parquet(feed.toString)
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // Purge groups present in this trigger — a bounded driver
-            // scalar (st22's routing class); processed in remainder
-            // order so a combined trigger applies purges in sequence.
-            val rems = batch.select(rem.as("r")).distinct()
-              .collect().map(_.getInt(0)).toSeq.sorted
-            rems.foreach { r =>
-              Incremental.purgeIdempotent(s, dirs,
-                batch.filter(rem === r), s"purge_r$r")
-              ()
-            }
+    val root = Scratch.dir(s, d, "st37_root")
+    Scratch.memo(root) {
+      val fsPath = new org.apache.hadoop.fs.Path(root)
+      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      val dirs = Incremental.Dirs(root)
+      Incremental.baseBuild(s, dirs,
+        graft.sources.Tables.documents(s, d)
+          .select(col("doc_id"), col("lang"), col("text")))
+      val (feed, schema) = st37PurgeFeed(s, d)
+      val rem = pmod(col("doc_id"), lit(16L)).cast("int")
+      val q = s.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "1") // one takedown batch per trigger
+        .parquet(feed.toString)
+        .writeStream
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          // Purge groups present in this trigger — a bounded driver
+          // scalar (st22's routing class); processed in remainder
+          // order so a combined trigger applies purges in sequence.
+          val rems = batch.select(rem.as("r")).distinct()
+            .collect().map(_.getInt(0)).toSeq.sorted
+          rems.foreach { r =>
+            Incremental.purgeIdempotent(s, dirs,
+              batch.filter(rem === r), s"purge_r$r")
+            ()
           }
-          .start()
-        q.awaitTermination()
-        org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
-        dirs
-      })
+        }
+        .start()
+      q.awaitTermination()
+      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      dirs
     }
   }
 
@@ -530,41 +504,37 @@ object Streams {
     * already rewrote — the stale-side-artifact rot point). Memoized
     * per (app, fixture); oracle = every artifact REBUILT over the
     * survivors of BOTH purges. */
-  private val stagedEstateStreams =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private def st39StreamRun(s: SparkSession, d: String): String = {
     import graft.operators.Incremental
-    val root = graft.sources.Scratch.dir(s, d, "st39_root")
-    stagedEstateStreams.synchronized {
-      stagedEstateStreams.getOrElseUpdate(root, {
-        val fsPath = new org.apache.hadoop.fs.Path(root)
-        fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-        Incremental.estateBuild(s, root,
-          graft.sources.Tables.documents(s, d)
-            .select(col("doc_id"), col("text")))
-        val (feed, schema) = st37PurgeFeed(s, d)
-        val rem = pmod(col("doc_id"), lit(16L)).cast("int")
-        val q = s.readStream.schema(schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", "1") // one takedown batch per trigger
-          .parquet(feed.toString)
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val rems = batch.select(rem.as("r")).distinct()
-              .collect().map(_.getInt(0)).toSeq.sorted
-            rems.foreach { r =>
-              Incremental.estatePurgeIdempotent(s, root,
-                batch.filter(rem === r), s"estate_purge_r$r")
-              ()
-            }
+    val root = Scratch.dir(s, d, "st39_root")
+    Scratch.memo(root) {
+      val fsPath = new org.apache.hadoop.fs.Path(root)
+      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      Incremental.estateBuild(s, root,
+        graft.sources.Tables.documents(s, d)
+          .select(col("doc_id"), col("text")))
+      val (feed, schema) = st37PurgeFeed(s, d)
+      val rem = pmod(col("doc_id"), lit(16L)).cast("int")
+      val q = s.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "1") // one takedown batch per trigger
+        .parquet(feed.toString)
+        .writeStream
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val rems = batch.select(rem.as("r")).distinct()
+            .collect().map(_.getInt(0)).toSeq.sorted
+          rems.foreach { r =>
+            Incremental.estatePurgeIdempotent(s, root,
+              batch.filter(rem === r), s"estate_purge_r$r")
+            ()
           }
-          .start()
-        q.awaitTermination()
-        org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
-        root
-      })
+        }
+        .start()
+      q.awaitTermination()
+      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      root
     }
   }
 
@@ -574,7 +544,7 @@ object Streams {
   private def st38TombFeed(s: SparkSession, d: String) = {
     val ids = graft.sources.Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"))
-    val feed = stagedFeed(s, d, "st38t") { f =>
+    val feed = Scratch.staged(s, d, "feed_st38t") { f =>
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, ids.filter(pmod(col("vec_id"), lit(16L)) === 5),
         "t1.parquet", t0)
@@ -628,36 +598,32 @@ object Streams {
     * .Similarity.probeWithTombstones]]), so deletes are visible even
     * between a ledger append and its compaction. Memoized per (app,
     * fixture); oracle = ss02's exact probe over the survivors. */
-  private val stagedVecTombRuns =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
   private[graft] def st38StreamRun(s: SparkSession, d: String): (String, String) = {
     import graft.operators.Similarity
-    val live = graft.sources.Scratch.dir(s, d, "st38_live")
-    val tombDir = graft.sources.Scratch.dir(s, d, "st38_tomb")
-    stagedVecTombRuns.synchronized {
-      stagedVecTombRuns.getOrElseUpdate(live, {
-        val vecsAll = Similarity.vecs(s, d)
-          .select(col("vec_id"), col("e"), col("nrm"), col("label"))
-        vecsAll.write.mode("overwrite").partitionBy("label").parquet(live)
-        graft.sources.Pinned.commit(new java.io.File(live)): Unit
-        vecsAll.filter(lit(false)).select(col("vec_id"), col("label"))
-          .write.mode("overwrite").parquet(tombDir)
-        val (feed, schema) = st38TombFeed(s, d)
-        val q = s.readStream.schema(schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", "1") // one delete batch per trigger
-          .parquet(feed.toString)
-          .writeStream
-          .outputMode(OutputMode.Append())
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            vecTombStep(batch, live, tombDir)
-          }
-          .start()
-        q.awaitTermination()
-        org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
-        (live, tombDir)
-      })
+    val live = Scratch.dir(s, d, "st38_live")
+    val tombDir = Scratch.dir(s, d, "st38_tomb")
+    Scratch.memo(live) {
+      val vecsAll = Similarity.vecs(s, d)
+        .select(col("vec_id"), col("e"), col("nrm"), col("label"))
+      vecsAll.write.mode("overwrite").partitionBy("label").parquet(live)
+      graft.sources.Pinned.commit(new java.io.File(live)): Unit
+      vecsAll.filter(lit(false)).select(col("vec_id"), col("label"))
+        .write.mode("overwrite").parquet(tombDir)
+      val (feed, schema) = st38TombFeed(s, d)
+      val q = s.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "1") // one delete batch per trigger
+        .parquet(feed.toString)
+        .writeStream
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          vecTombStep(batch, live, tombDir)
+        }
+        .start()
+      q.awaitTermination()
+      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      (live, tombDir)
     }
   }
 
@@ -764,7 +730,7 @@ object Streams {
         !f.getName.startsWith("."))
 
   private def deleteRecDir(f: java.io.File): Unit =
-    graft.sources.Scratch.deleteRec(f)
+    Scratch.deleteRec(f)
 
   /** Complete (or discard) a ledger compaction a crash interrupted:
     * the swap below is live → `_old`, `_compacting` → live, drop
@@ -1079,7 +1045,7 @@ object Streams {
       val s = stateTuned(s0)
       // Deterministic scratch dir, cleared up front: the sink appends,
       // so stale batches from a previous harness run must not survive.
-      val outDir = graft.sources.Scratch.dir(s, d, "st07_out")
+      val outDir = Scratch.dir(s, d, "st07_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val agg = eventStream(s, d)
@@ -1117,7 +1083,7 @@ object Streams {
     //    spec (SourcesSpec) proves offset recovery mid-stream.
     "st15_dsv2_stream" -> ((s0, d) => {
       val s = stateTuned(s0)
-      val outDir = graft.sources.Scratch.dir(s, d, "st15_out")
+      val outDir = Scratch.dir(s, d, "st15_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val stream = s.readStream.format("graft.sources.GenSource")
@@ -1358,7 +1324,7 @@ object Streams {
       import graft.operators.Similarity
       val idx = Similarity.ivfIndex(s, d)
       val (feed, schema) = embFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st22_out")
+      val outDir = Scratch.dir(s, d, "st22_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1400,8 +1366,8 @@ object Streams {
       val s = stateTuned(s0)
       import graft.operators.Similarity
       val (feed, schema) = embFeed(s, d)
-      val idxDir = graft.sources.Scratch.dir(s, d, "st24_idx")
-      val compactDir = graft.sources.Scratch.dir(s, d, "st24_idxc")
+      val idxDir = Scratch.dir(s, d, "st24_idx")
+      val compactDir = Scratch.dir(s, d, "st24_idxc")
       Seq(idxDir, compactDir).foreach { p =>
         val fsPath = new org.apache.hadoop.fs.Path(p)
         fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
@@ -1446,9 +1412,9 @@ object Streams {
       val s = stateTuned(s0)
       import graft.operators.Similarity
       val (feed, schema) = embFeed(s, d)
-      val rawDir = graft.sources.Scratch.dir(s, d, "st25_raw")
-      val liveDir = graft.sources.Scratch.dir(s, d, "st25_live")
-      val outDir = graft.sources.Scratch.dir(s, d, "st25_out")
+      val rawDir = Scratch.dir(s, d, "st25_raw")
+      val liveDir = Scratch.dir(s, d, "st25_live")
+      val outDir = Scratch.dir(s, d, "st25_out")
       Seq(rawDir, liveDir, outDir).foreach { p =>
         val fsPath = new org.apache.hadoop.fs.Path(p)
         fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
@@ -1508,7 +1474,7 @@ object Streams {
       val dict = graft.operators.Bpe.bpeDict(s, d)
         .select(col("word"), col("s"), col("wbkt"))
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st26_out")
+      val outDir = Scratch.dir(s, d, "st26_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1548,7 +1514,7 @@ object Streams {
       // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st29_out")
+      val outDir = Scratch.dir(s, d, "st29_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1593,7 +1559,7 @@ object Streams {
       val s = stateTuned(s0)
       import graft.operators.{Curation, Similarity, TextAnalysis}
       val (feed, schema) = embFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st30_out")
+      val outDir = Scratch.dir(s, d, "st30_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val ctr = Similarity.kmeansCentroids(s, d)
@@ -1643,7 +1609,7 @@ object Streams {
       import graft.operators.TextAnalysis
       val w = TextAnalysis.trainClassifier(s, d)._2
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st31_out")
+      val outDir = Scratch.dir(s, d, "st31_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1685,7 +1651,7 @@ object Streams {
       val dropSet = Curation.stagedDropSet(s, d)
       val canon = Curation.stagedCanon(s, d)
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st32_out")
+      val outDir = Scratch.dir(s, d, "st32_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1722,7 +1688,7 @@ object Streams {
       // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st33_out")
+      val outDir = Scratch.dir(s, d, "st33_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1760,7 +1726,7 @@ object Streams {
       // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st34_out")
+      val outDir = Scratch.dir(s, d, "st34_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1877,7 +1843,7 @@ object Streams {
       // artifact every micro-batch).
       val docServe = Curation.stagedDocServe(s, d)
       val (feed, schema) = embFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st28_out")
+      val outDir = Scratch.dir(s, d, "st28_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -1919,7 +1885,7 @@ object Streams {
       // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st27_out")
+      val outDir = Scratch.dir(s, d, "st27_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -2004,7 +1970,7 @@ object Streams {
       // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st17_out")
+      val outDir = Scratch.dir(s, d, "st17_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -2044,7 +2010,7 @@ object Streams {
       val s = stateTuned(s0)
       val bench = graft.operators.Dedup.benchGramSet(s, d)
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val outDir = graft.sources.Scratch.dir(s, d, "st18_out")
+      val outDir = Scratch.dir(s, d, "st18_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -2104,9 +2070,9 @@ object Streams {
       val s = stateTuned(s0)
       val (feed, schema) = docsFeed(s, d)
       val (bandsDir, setsDir, outDir) = (
-        graft.sources.Scratch.dir(s, d, "st19_bands"),
-        graft.sources.Scratch.dir(s, d, "st19_sets"),
-        graft.sources.Scratch.dir(s, d, "st19_out"))
+        Scratch.dir(s, d, "st19_bands"),
+        Scratch.dir(s, d, "st19_sets"),
+        Scratch.dir(s, d, "st19_out"))
       // Seed each ledger/sink with an EMPTY correctly-typed relation so
       // batch 0 probes a valid (empty) ledger and the read-back never
       // hits a missing path.
@@ -2143,8 +2109,8 @@ object Streams {
       val s = stateTuned(s0)
       val (feed, schema) = docsFeed(s, d)
       val (bandsDir, outDir) = (
-        graft.sources.Scratch.dir(s, d, "st36_bands"),
-        graft.sources.Scratch.dir(s, d, "st36_out"))
+        Scratch.dir(s, d, "st36_bands"),
+        Scratch.dir(s, d, "st36_out"))
       phashSeed(graft.sources.Tables.documents(s, d).limit(0),
         bandsDir, outDir)
       val q = s.readStream.schema(schema)
@@ -2189,7 +2155,7 @@ object Streams {
         .select(col("label"), col("vec_id").as("eval_id"),
           col("e").as("ee"), col("nrm").as("enrm"))
       val (feed, schema) = embFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "st20_out")
+      val outDir = Scratch.dir(s, d, "st20_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)
@@ -2284,7 +2250,7 @@ object Streams {
       import graft.operators.Dedup
       val bench = Dedup.benchGramSet(s, d)
       val (feed, schema) = docsFeed(s, d)
-      val outDir = graft.sources.Scratch.dir(s, d, "pl04_out")
+      val outDir = Scratch.dir(s, d, "pl04_out")
       val fsPath = new org.apache.hadoop.fs.Path(outDir)
       fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
       val q = s.readStream.schema(schema)

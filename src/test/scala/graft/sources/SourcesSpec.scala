@@ -156,4 +156,82 @@ class SourcesSpec extends SparkSpec {
         s"lang ${r.getString(0)}: v1 rows did not backfill NULL")
     }
   }
+
+  // --- Scratch.staged / stagedParquet: the one write-once staging path.
+
+  private def freshTag(name: String) = s"spec_${name}_${System.nanoTime()}"
+
+  test("staged runs the build once when 8 threads stage the same fresh tag") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors}
+    val tag = freshTag("once")
+    val runs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val calls = (1 to 8).map(_ => pool.submit(new Callable[java.io.File] {
+        def call(): java.io.File = {
+          go.await()
+          Scratch.staged(spark, sfDir, tag) { f =>
+            runs.incrementAndGet()
+            Thread.sleep(200) // hold the build open while the others arrive
+            new java.io.File(f, "part-0").createNewFile(): Unit
+          }
+        }
+      }))
+      go.countDown()
+      val dirs = calls.map(_.get()).toSet
+      assert(runs.get === 1, "write ran more than once")
+      assert(dirs.size === 1)
+      assert(new java.io.File(dirs.head, "_SUCCESS").exists())
+      Scratch.deleteRec(dirs.head)
+    } finally pool.shutdown()
+  }
+
+  test("staged rebuilds a dir a crashed build left without _SUCCESS") {
+    val tag = freshTag("crash")
+    val dir = new java.io.File(Scratch.dir(spark, sfDir, tag))
+    dir.mkdirs()
+    val junk = new java.io.File(dir, "part-torn")
+    junk.createNewFile()
+    var ran = false
+    val got = Scratch.staged(spark, sfDir, tag) { f =>
+      ran = true
+      new java.io.File(f, "part-0").createNewFile(): Unit
+    }
+    assert(ran, "the unmarked dir was taken as a finished build")
+    assert(got === dir)
+    assert(!junk.exists(), "the crashed build's files survived the rebuild")
+    assert(new java.io.File(dir, "part-0").exists())
+    assert(new java.io.File(dir, "_SUCCESS").exists())
+    Scratch.deleteRec(dir)
+  }
+
+  test("stagedParquet reads are pinned: a file added after the commit is not seen") {
+    val tag = freshTag("pinned")
+    val df = Scratch.stagedParquet(spark, sfDir, tag)(spark.range(10).toDF("id"))
+    val dir = Scratch.dir(spark, sfDir, tag)
+    spark.range(100, 105).toDF("id").write.mode("append").parquet(dir)
+    assert(spark.read.parquet(dir).count() === 15, "the added file did not land")
+    assert(df.count() === 10)
+    assert(Scratch.stagedParquet(spark, sfDir, tag)(
+      fail("a staged artifact was rebuilt")).count() === 10)
+    Scratch.deleteRec(new java.io.File(dir))
+  }
+
+  test("java.io.tmpdir is read only in graft/sources/Scratch.scala") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    val sources = walk(root).filter(_.getName.endsWith(".scala"))
+    assert(sources.exists(_.getPath.endsWith("graft/sources/Scratch.scala")))
+    val offenders = sources
+      .filterNot(_.getPath.endsWith("graft/sources/Scratch.scala"))
+      .filter(f => new String(Files.readAllBytes(f.toPath), "UTF-8")
+        .contains("java.io.tmpdir"))
+    assert(offenders.isEmpty,
+      "derive scratch paths with graft.sources.Scratch instead: " +
+        offenders.mkString(", "))
+  }
 }
