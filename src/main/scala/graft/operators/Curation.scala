@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge
 import graft.sources.{Scratch, Tables}
 
 /** The end-to-end training-data curation pipeline, composed from the
@@ -291,9 +292,9 @@ object Curation {
     //    ships: every document attributed to the FIRST pl05 gate that
     //    rejects it (boilerplate_only → low_quality → duplicate → kept),
     //    rolled up per (lang, stage). Same per-doc relation as pl05
-    //    ([[webScored]] — Catalyst shares the scan and stages between
-    //    audit and funnel if both run), so the funnel costs ONE extra
-    //    aggregation, not a re-run of the pipeline; the canonical flag
+    //    ([[webScored]]; each query materializes its own, nothing carries
+    //    over between a pl05 and a pl08 run), so the funnel costs ONE
+    //    extra aggregation over it, not a re-run of its stages; the canonical flag
     //    rides a doc_id-keyed shuffle-hash join (corpus fraction, pl03's
     //    rule). The stages partition the corpus: sum(n_docs) over the
     //    funnel == count(documents), which the spec pins.
@@ -608,23 +609,26 @@ object Curation {
     * corpus-dedup, and the in-row quality score — shared by pl05 (the
     * shard audit) and pl08 (the funnel attribution). One relation:
     * (doc_id, lang, n_blocks, n_kept, txt, n, u, q). */
-  private def webScored(s: SparkSession, d: String): DataFrame = {
+  private[graft] def webScored(s: SparkSession, d: String): DataFrame = {
     // The markup extraction (regex strip + link-density gates) is the
     // pipeline's expensive pass and its consumers reference the blocks
     // relation from MULTIPLE subtrees (bh twice, the reassembly once;
     // pl05/pl08/pl14 then reference the scored relation 2-3× more).
     // Catalyst does not dedupe common subplans (the r13 plan dumps show
-    // zero ReusedExchange here), so uncheckpointed, the extraction ran
-    // ~4-5× per query. localCheckpoint materializes each stage ONCE per
-    // query execution (ta37's discipline; at 100 TB this is a written
-    // intermediate artifact — guide §8's "fingerprints only" move).
-    val blocksDf = webBlocks(s, d).localCheckpoint()
+    // zero ReusedExchange here), so unmaterialized, the extraction ran
+    // ~4-5× per query. CatalystBridge.materialized computes each stage
+    // ONCE per query (the pipes Forker: one output, N readers) and keeps
+    // lineage; its subplan, the bh-keyed dedup join included, prints
+    // inside every consumer's InMemoryTableScan, and its blocks are
+    // released once the query's frames are unreachable. No CacheManager
+    // entry: each query (pl05, pl08, pl14) materializes its own.
+    val blocksDf = CatalystBridge.materialized(webBlocks(s, d))
     val bh = bhOf(blocksDf)
     val kept = bh.hint("shuffle_hash")
       .join(dropSetOf(bh).hint("shuffle_hash"), Seq("bh"), "left_anti")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("idx"))).as("kept_idx"))
-    cleanedScoredOf(blocksDf, kept).localCheckpoint()
+    CatalystBridge.materialized(cleanedScoredOf(blocksDf, kept))
   }
 
   /** Serving-artifact bucket width (Scratch.ServeBuckets). Every staged

@@ -36,6 +36,23 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
+  /** Materialize `df` once per query that reads it, however many subtrees
+    * reference the result: an `InMemoryRelation` over the frame's own
+    * query execution, NOT registered in the session's CacheManager. The
+    * cached RDD keeps its lineage (a lost block is recomputed), the
+    * subplan prints under every consumer's `InMemoryTableScan`, and the
+    * RDD is persisted at the RDD level, so the ContextCleaner drops its
+    * blocks once the returned frame is unreachable — no later query can
+    * hit it, unlike `Dataset.persist`. Lazy: the first action fills it. */
+  def materialized(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    ofRows(df.sparkSession, org.apache.spark.sql.execution.columnar.InMemoryRelation(
+      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, df.queryExecution, None))
+
+  /** Entries in the session's CacheManager (`Dataset.persist`/`CACHE TABLE`). */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.numCachedEntries
+
   /** Unload every loaded state-store provider (in-memory state maps).
     * A finished AvailableNow query's providers otherwise stay loaded for
     * the life of the executor — harmless for one query, but a run that

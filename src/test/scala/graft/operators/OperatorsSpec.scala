@@ -262,6 +262,36 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  // webScored materializes once per query WITHOUT a registered cache: a
+  // CacheManager entry would outlive the query and serve later calls
+  // stale rows once the fixture files at the same path change.
+  test("web curation queries leave no CacheManager entry (pl05/pl08/pl14)") {
+    import org.apache.spark.sql.graft.CatalystBridge
+    val before = CatalystBridge.cachedEntries(spark)
+    Seq("pl05_web_curation", "pl08_funnel_audit", "pl14_provenance")
+      .foreach(q => SparkEntry.queries(q)(spark, sfDir).collect())
+    assert(CatalystBridge.cachedEntries(spark) == before,
+      "a web curation query registered a session cache entry")
+  }
+
+  // ...and keeps lineage: blocks lost after a first reader are recomputed
+  // from the scan for the next (a localCheckpoint'ed relation fails here).
+  // Each rollup is a fresh plan over the same relation, so it cannot be
+  // served from the first one's shuffle output.
+  test("webScored recomputes its materialized relations after their blocks are lost") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val scored = Curation.webScored(spark, sfDir)
+    def rollup() = scored.groupBy(col("lang"))
+      .agg(count(lit(1)), sum(col("n_blocks")), sum(col("n_kept")), sum(length(col("txt"))))
+      .collect().map(_.toString).sorted.toSeq
+    val first = rollup()
+    val fresh = sc.getPersistentRDDs.keySet -- before
+    assert(fresh.nonEmpty, "webScored persisted nothing")
+    fresh.foreach(id => org.apache.spark.SparkEnv.get.blockManager.master.removeRdd(id, true))
+    assert(rollup() == first)
+  }
+
   // pl09: the epoch plan must account for EVERY upsampled copy exactly
   // once across shards, with non-degenerate routing and budgets.
   test("pl09 shards cover every ta35 copy exactly once") {
