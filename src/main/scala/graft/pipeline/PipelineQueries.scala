@@ -2,6 +2,8 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.OutputMode
+import graft.sources.Scratch
 
 /** Registered queries driven through the Layer-1 Pipes DSL — the
   * reference's flagship DIAMOND deployment shape
@@ -13,7 +15,7 @@ import org.apache.spark.sql.functions._
   * this registers the deployment shape itself as an oracle-checked query:
   * the shared subtree is persisted ONCE (the F4 broadcast-fidelity rule),
   * both sinks are real parquet writers running concurrently via
-  * Runner.start()/done(), and the query's result is the union of what the
+  * one Runner.run(), and the query's result is the union of what the
   * two sinks actually WROTE — so the driver's hash gate checks the whole
   * pipeline end to end, not a DataFrame that merely resembles it.
   *
@@ -24,31 +26,12 @@ import org.apache.spark.sql.functions._
   */
 object PipelineQueries {
 
-  /** Run a streaming Dataset to completion (AvailableNow) into a memory
-    * sink, then persist the materialized table to `out` — the sink shape
-    * pp02's FinalFns use. Unique sink names keep the two concurrent
-    * Runner futures from colliding. */
-  private val sinkSeq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private def drainTo(ds: DataFrame, out: String): Unit = {
-    val name = s"graft_pp_sink_${sinkSeq.incrementAndGet()}"
-    // Explicit EPHEMERAL checkpoint on the RAM-backed root (Streams'
-    // runToTable discipline): the complete-mode aggregation commits one
-    // state-store delta per shard per trigger, and against the default
-    // disk tmpdir those fsyncs were nearly all of pp02's task runtime
-    // (measured 46 s task time, 1.6 s CPU). Same create-run-delete
-    // lifecycle as Spark's own temporary checkpoints.
-    val ckpt = new java.io.File(graft.streaming.Streams.ckptRoot,
-      s"graft_ckpt_${ds.sparkSession.sparkContext.applicationId}_$name")
-    val q = ds.writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt.getPath)
-      .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete())
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try {
-      q.awaitTermination()
-      ds.sparkSession.table(name).write.mode("overwrite").parquet(out)
-    } finally graft.sources.Scratch.deleteRec(ckpt)
-  }
+  /** Drain a streaming Dataset into a memory sink (the one bounded run,
+    * `Streams.runToTable`), then persist the drained table to `out` — the
+    * sink shape pp02's FinalFns use. */
+  private def drainTo(ds: DataFrame, out: String): Unit =
+    graft.streaming.Streams.runToTable(ds, OutputMode.Complete())
+      .write.mode("overwrite").parquet(out)
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- The diamond again, UNBOUNDED: the reference's model is
@@ -58,7 +41,7 @@ object PipelineQueries {
     //    START node (ChannelBufferLen → maxFilesPerTrigger, the F11
     //    knob), a shared normalize middle, fan-out to two independent
     //    windowless aggregations, each drained by its own FinalFn —
-    //    Runner.start() launches both streaming queries CONCURRENTLY.
+    //    Runner.run() launches both streaming queries CONCURRENTLY.
     //    Streaming fan-out fidelity comes from source replay, not a
     //    persist (see PipelineBuilder.build step 5). Result = union of
     //    both sink relations; oracle = the two batch aggregations.
@@ -69,12 +52,8 @@ object PipelineQueries {
       // CPU width (the st12/st13 discipline — 32 shards × 2 queries of
       // store lifecycle dominated the trigger).
       val s = graft.streaming.Streams.stateTuned(s0)
-      val outA = graft.sources.Scratch.dir(s, d, "pp02_by_type")
-      val outB = graft.sources.Scratch.dir(s, d, "pp02_by_user")
-      Seq(outA, outB).foreach { dir =>
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
+      val outA = Scratch.fresh(s, d, "pp02_by_type")
+      val outB = Scratch.fresh(s, d, "pp02_by_user")
       val schema = s.read.parquet(s"$d/events.parquet").schema
       val b = new PipelineBuilder(s, Pipes.ChannelBufferLen(1))
       val start = b.addFileStreamStart("events", d, schema, "events.parquet")
@@ -101,17 +80,12 @@ object PipelineQueries {
       b.sendTo(byUser, sinkB)
       val runner = b.build().fold(e => throw e, identity)
       runner.run() // two concurrent streaming queries
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
       s.read.parquet(outA).unionByName(s.read.parquet(outB))
     }),
 
     "pp01_fanout_diamond" -> ((s, d) => {
-      val outA = graft.sources.Scratch.dir(s, d, "pp01_by_source")
-      val outB = graft.sources.Scratch.dir(s, d, "pp01_by_lang")
-      Seq(outA, outB).foreach { dir =>
-        val p = new org.apache.hadoop.fs.Path(dir)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-      }
+      val outA = Scratch.fresh(s, d, "pp01_by_source")
+      val outB = Scratch.fresh(s, d, "pp01_by_lang")
       val b = new PipelineBuilder(s)
       val start = b.addStart[Row]("docs",
         sp => graft.sources.Tables.documents(sp, d).asInstanceOf[org.apache.spark.sql.Dataset[Row]])

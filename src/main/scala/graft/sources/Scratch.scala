@@ -88,6 +88,14 @@ object Scratch {
         d.replaceAll("[^A-Za-z0-9]", "_")).getPath
   }
 
+  /** [[dir]] for `tag`, emptied: the start of a sink the caller fills by
+    * appending, so nothing from an earlier run survives. */
+  private[graft] def fresh(s: SparkSession, d: String, tag: String): String = {
+    val p = dir(s, d, tag)
+    deleteRec(new File(p))
+    p
+  }
+
   /** A value computed at most once; a build that throws is retried by
     * the next caller. The thunk is dropped once it has run, so the memo
     * holds only results, never the plans the build closed over. */

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType
 import java.util.concurrent.atomic.AtomicInteger
 import graft.sources.Scratch
 
@@ -77,14 +78,15 @@ final case class EventRow(user_id: Long, cents: Long)
   * /root/reference/pipe/internal/connect/connectors.go:36-41). Spark-first,
   * a bounded run of an unbounded pipeline is `Trigger.AvailableNow`:
   * process everything available, then stop — the analog of "all sources
-  * returned, close cascade drains the graph". `StreamingQuery
-  * .awaitTermination` is the reference's `Runner.Done()`.
+  * returned, close cascade drains the graph". Every bounded run goes
+  * through one helper, [[Streams.run]]: its start is the reference's
+  * `Runner.Start()` and its blocking wait is `Runner.Done()`.
   *
   * Each query here builds a *streaming* plan over the same events parquet
   * the batch queries read, runs it to completion, and returns the result
   * table — so the driver's DuckDB oracle checks stream/batch parity.
   * The memory sink is test-scale only; production sinks are parquet/Kafka
-  * via the same `writeStream` call. The stateful shapes (windowed agg,
+  * through the same helper. The stateful shapes (windowed agg,
   * streaming dedup, mapGroupsWithState) shuffle by key into state-store
   * partitions exactly as a cluster run would.
   *
@@ -97,9 +99,12 @@ object Streams {
 
   private val nameSeq = new AtomicInteger(0)
 
+  /** State-store shard count: SPARK_GRAFT_STATE_SHARDS (default 4). */
+  private lazy val stateShards = sys.env.getOrElse("SPARK_GRAFT_STATE_SHARDS", "4").toInt
+
   /** Stateful streaming queries run on a shared ISOLATED session with
-    * `spark.sql.shuffle.partitions` tuned down to SPARK_GRAFT_STATE_SHARDS
-    * (default 4). State-store shard count is a STATE-SIZE knob, not a
+    * `spark.sql.shuffle.partitions` tuned down to [[stateShards]].
+    * State-store shard count is a STATE-SIZE knob, not a
     * CPU knob: every shard pays per-micro-batch store load + delta-
     * commit IO (a stream-stream join keeps 4 stores per shard per
     * side), so 32 shards over fixture-sized state spend more wall-clock
@@ -114,16 +119,38 @@ object Streams {
     * (st08's click/view self-join) binds every leg to the SAME session
     * — cross-session Dataset joins are illegal — and so the conf
     * mutation never touches the caller's session (the st12/st13
-    * isolation discipline, applied registry-wide). */
+    * isolation discipline, applied registry-wide).
+    *
+    * Micro-batch-width discipline: the stateless foreachBatch queries
+    * run here too, because their per-trigger relations are batch-bounded
+    * (probes, broadcasts, pruned artifact scans). Their exchanges run at
+    * the state-shard width, where a CPU-width exchange over a fixture-
+    * sized batch is per-task fixed overhead (measured ~24 ms deserialize
+    * alone), not parallelism; CPU-heavy passes keep their scan width or
+    * repartition explicitly (phashStep's decode, st18's tokenize). */
   private val tunedSessions =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
   private[graft] def stateTuned(s0: SparkSession): SparkSession =
     tunedSessions.computeIfAbsent(s0, s => {
       val t = s.newSession()
-      t.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_SHARDS", "4").toInt)
+      t.conf.set("spark.sql.shuffle.partitions", stateShards)
       t
     })
+
+  /** st12/st13's session: a fresh isolated `newSession()` per call on
+    * the RocksDB state-store provider (the only one transformWithState
+    * supports), so the provider swap never leaks into a concurrently
+    * planning query — nothing to restore, the session is discarded.
+    * Same [[stateShards]] width as [[stateTuned]]: each shard is one
+    * RocksDB instance OPEN+commit per micro-batch (~0.5 s of task time
+    * each, measured). */
+  private def rocksSession(s0: SparkSession): SparkSession = {
+    val s = s0.newSession()
+    s.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    s.conf.set("spark.sql.shuffle.partitions", stateShards)
+    s
+  }
 
   /** Events as a *stream*: schema from a batch peek (schema inference is
     * off in production streaming), ts normalized to TIMESTAMP exactly like
@@ -141,7 +168,7 @@ object Streams {
         .parquet(d))
   }
 
-  /** Checkpoint root for the bounded memory-sink harness queries.
+  /** Checkpoint root for every bounded run ([[run]]).
     * These checkpoints are EPHEMERAL by design (Spark's own temporary-
     * checkpoint path deletes them after a clean run); what they are NOT
     * is cheap: every stateful shard pays per-micro-batch delta-commit
@@ -161,29 +188,62 @@ object Streams {
     base
   }
 
-  /** Run a streaming Dataset to completion into a memory sink; return the
-    * materialized result. Complete mode: the sink holds the final state
-    * of the aggregation, independent of how AvailableNow batched the
-    * input. */
-  private def runToTable(ds: Dataset[_], mode: OutputMode): DataFrame = {
-    val name = s"graft_stream_${nameSeq.incrementAndGet()}"
+  private val runLock = new Object
+  private var inFlight = 0 // bounded runs started and not finished; under runLock
+
+  /** THE bounded streaming run — every `writeStream` in the library. It
+    * starts `ds` under a unique query name with an ephemeral checkpoint
+    * under [[ckptRoot]], lets `sink` choose the sink, drains everything
+    * available (`Trigger.AvailableNow`), blocks until the query stops,
+    * and deletes the checkpoint. Then it releases the state stores (a
+    * stream-stream join buffers the whole watermark window; a JVM running
+    * many bounded queries would otherwise hold all of it). The unload is
+    * JVM-wide, so only the last run in flight performs it (pp02 drains
+    * two queries at once). Returns the query name. */
+  private def run[T](ds: Dataset[T], mode: OutputMode, prefix: String)(
+      sink: DataStreamWriter[T] => DataStreamWriter[T]): String = {
+    val name = s"${prefix}_${nameSeq.incrementAndGet()}"
     val ckpt = new java.io.File(ckptRoot,
       s"graft_ckpt_${ds.sparkSession.sparkContext.applicationId}_$name")
-    val q = ds.writeStream
-      .format("memory")
-      .queryName(name)
-      .option("checkpointLocation", ckpt.getPath)
-      .outputMode(mode)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally Scratch.deleteRec(ckpt) // temp-checkpoint lifecycle
-    // Release this query's in-memory state (a stream-stream join buffers
-    // the whole watermark window); harness runs execute many bounded
-    // streaming queries in one JVM and would otherwise hold all of it.
-    org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
-    ds.sparkSession.table(name)
+    runLock.synchronized(inFlight += 1)
+    try sink(ds.writeStream.queryName(name)
+        .option("checkpointLocation", ckpt.getPath).outputMode(mode))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    finally {
+      Scratch.deleteRec(ckpt)
+      runLock.synchronized {
+        inFlight -= 1
+        if (inFlight == 0)
+          org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      }
+    }
+    name
   }
+
+  /** [[run]] into a memory sink; returns the drained table. Complete
+    * mode: the sink holds the final state of the aggregation, independent
+    * of how AvailableNow batched the input. The memory sink registers a
+    * temp view of the query name on the run's session; the returned frame
+    * is resolved from it and the view is dropped, so the session keeps
+    * no view (and no sink rows) past the frame's life. */
+  private[graft] def runToTable[T](ds: Dataset[T], mode: OutputMode): DataFrame = {
+    val name = run(ds, mode, "graft_stream")(_.format("memory"))
+    val s = ds.sparkSession
+    try s.table(name) finally s.catalog.dropTempView(name): Unit
+  }
+
+  /** [[run]] through `foreachBatch`: `f` gets each micro-batch and its id. */
+  private def runEach(ds: DataFrame, mode: OutputMode = OutputMode.Append())(
+      f: (DataFrame, Long) => Unit): Unit =
+    run(ds, mode, "graft_batch")(_.foreachBatch(f)): Unit
+
+  /** A staged feed (dir, schema) as a stream: one file per micro-batch,
+    * in the modification-time order [[stageFeedFile]] pins. */
+  private def feed(s: SparkSession, staged: (java.io.File, StructType)): DataFrame =
+    s.readStream.schema(staged._2)
+      .option("pathGlobFilter", "*.parquet")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(staged._1.toString)
 
   import graft.Exprs.cents // shared exact-integer-cents helper
 
@@ -385,8 +445,7 @@ object Streams {
     import graft.operators.Incremental
     val root = Scratch.dir(s, d, "st35_root")
     Scratch.memo(root) {
-      val fsPath = new org.apache.hadoop.fs.Path(root)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      Scratch.deleteRec(new java.io.File(root))
       val dirs = Incremental.Dirs(root)
       val P = Incremental.Parts
       val part = pmod(col("doc_id"), lit(P.toLong)).cast("int")
@@ -394,29 +453,18 @@ object Streams {
         graft.sources.Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("text"))
           .filter(part < P - 2))
-      val (feed, schema) = pl11DeltaFeed(s, d)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1") // one crawl shard per trigger
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Shards present in this trigger — a ≤Parts-int driver
-          // scalar (st22's routing class); processed in shard order
-          // so a combined trigger still applies nights in sequence.
-          val parts = batch.select(part.as("p")).distinct()
-            .collect().map(_.getInt(0)).toSeq.sorted
-          parts.foreach { p =>
-            Incremental.nightIdempotent(s, dirs,
-              batch.filter(part === p), p)
-            ()
-          }
+      runEach(feed(s, pl11DeltaFeed(s, d))) { (batch, _) =>
+        // Shards present in this trigger — a ≤Parts-int driver
+        // scalar (st22's routing class); processed in shard order
+        // so a combined trigger still applies nights in sequence.
+        val parts = batch.select(part.as("p")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        parts.foreach { p =>
+          Incremental.nightIdempotent(s, dirs,
+            batch.filter(part === p), p)
+          ()
         }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      }
       dirs
     }
   }
@@ -455,36 +503,24 @@ object Streams {
     import graft.operators.Incremental
     val root = Scratch.dir(s, d, "st37_root")
     Scratch.memo(root) {
-      val fsPath = new org.apache.hadoop.fs.Path(root)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      Scratch.deleteRec(new java.io.File(root))
       val dirs = Incremental.Dirs(root)
       Incremental.baseBuild(s, dirs,
         graft.sources.Tables.documents(s, d)
           .select(col("doc_id"), col("lang"), col("text")))
-      val (feed, schema) = st37PurgeFeed(s, d)
       val rem = pmod(col("doc_id"), lit(16L)).cast("int")
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1") // one takedown batch per trigger
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Purge groups present in this trigger — a bounded driver
-          // scalar (st22's routing class); processed in remainder
-          // order so a combined trigger applies purges in sequence.
-          val rems = batch.select(rem.as("r")).distinct()
-            .collect().map(_.getInt(0)).toSeq.sorted
-          rems.foreach { r =>
-            Incremental.purgeIdempotent(s, dirs,
-              batch.filter(rem === r), s"purge_r$r")
-            ()
-          }
+      runEach(feed(s, st37PurgeFeed(s, d))) { (batch, _) =>
+        // Purge groups present in this trigger — a bounded driver
+        // scalar (st22's routing class); processed in remainder
+        // order so a combined trigger applies purges in sequence.
+        val rems = batch.select(rem.as("r")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        rems.foreach { r =>
+          Incremental.purgeIdempotent(s, dirs,
+            batch.filter(rem === r), s"purge_r$r")
+          ()
         }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      }
       dirs
     }
   }
@@ -508,32 +544,20 @@ object Streams {
     import graft.operators.Incremental
     val root = Scratch.dir(s, d, "st39_root")
     Scratch.memo(root) {
-      val fsPath = new org.apache.hadoop.fs.Path(root)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      Scratch.deleteRec(new java.io.File(root))
       Incremental.estateBuild(s, root,
         graft.sources.Tables.documents(s, d)
           .select(col("doc_id"), col("text")))
-      val (feed, schema) = st37PurgeFeed(s, d)
       val rem = pmod(col("doc_id"), lit(16L)).cast("int")
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1") // one takedown batch per trigger
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val rems = batch.select(rem.as("r")).distinct()
-            .collect().map(_.getInt(0)).toSeq.sorted
-          rems.foreach { r =>
-            Incremental.estatePurgeIdempotent(s, root,
-              batch.filter(rem === r), s"estate_purge_r$r")
-            ()
-          }
+      runEach(feed(s, st37PurgeFeed(s, d))) { (batch, _) =>
+        val rems = batch.select(rem.as("r")).distinct()
+          .collect().map(_.getInt(0)).toSeq.sorted
+        rems.foreach { r =>
+          Incremental.estatePurgeIdempotent(s, root,
+            batch.filter(rem === r), s"estate_purge_r$r")
+          ()
         }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      }
       root
     }
   }
@@ -609,20 +633,9 @@ object Streams {
       graft.sources.Pinned.commit(new java.io.File(live)): Unit
       vecsAll.filter(lit(false)).select(col("vec_id"), col("label"))
         .write.mode("overwrite").parquet(tombDir)
-      val (feed, schema) = st38TombFeed(s, d)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1") // one delete batch per trigger
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          vecTombStep(batch, live, tombDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(feed(s, st38TombFeed(s, d))) { (batch, _) =>
+        vecTombStep(batch, live, tombDir)
+      }
       (live, tombDir)
     }
   }
@@ -1019,11 +1032,7 @@ object Streams {
     //    watermark — a closed form the DuckDB oracle recomputes.
     "st06_watermark_late" -> ((s0, d) => {
       val s = stateTuned(s0)
-      val (feed, schema) = st06Feed(s, d)
-      val agg = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1") // one file per micro-batch
-        .parquet(feed.toString)
+      val agg = feed(s, st06Feed(s, d))
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
@@ -1039,30 +1048,19 @@ object Streams {
     //    emission per window (batch_id argmax), the same monotone-state
     //    selection st03 uses; same oracle as st01 = stream/batch parity.
     "st07_foreachbatch_sink" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       // Deterministic scratch dir, cleared up front: the sink appends,
       // so stale batches from a previous harness run must not survive.
-      val outDir = Scratch.dir(s, d, "st07_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      val outDir = Scratch.fresh(s, d, "st07_out")
       val agg = eventStream(s, d)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(cents(col("value"))).as("value_cents"))
         .select(date_format(col("window.start"), "yyyy-MM-dd HH:mm").as("hour"),
           col("event_type"), col("n"), col("value_cents"))
-      val q = agg.writeStream
-        .outputMode(OutputMode.Update())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(agg, OutputMode.Update()) { (batch, batchId) =>
+        batch.withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outDir)
+      }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("hour"), col("event_type"))
         .orderBy(col("batch_id").desc)
@@ -1083,24 +1081,17 @@ object Streams {
     //    spec (SourcesSpec) proves offset recovery mid-stream.
     "st15_dsv2_stream" -> ((s0, d) => {
       val s = stateTuned(s0)
-      val outDir = Scratch.dir(s, d, "st15_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      val outDir = Scratch.fresh(s, d, "st15_out")
       val stream = s.readStream.format("graft.sources.GenSource")
         .option("rows", "10000").option("partitions", "4")
         .option("rowsPerBatch", "2500").load()
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          batch.groupBy(col("grp"))
-            .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val"),
-                 min(col("id")).as("min_id"), max(col("id")).as("max_id"))
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }.start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(stream) { (batch, batchId) =>
+        batch.groupBy(col("grp"))
+          .agg(count(lit(1)).as("n"), sum(col("val")).as("sum_val"),
+               min(col("id")).as("min_id"), max(col("id")).as("max_id"))
+          .withColumn("batch_id", lit(batchId))
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).select(col("batch_id"), col("grp"),
         col("n"), col("sum_val"), col("min_id"), col("max_id"))
     }),
@@ -1174,20 +1165,9 @@ object Streams {
 
     // -- transformWithState (Spark 4 arbitrary-state API) on the RocksDB
     //    state store: per-user distinct-type count in a ValueState —
-    //    see DistinctTypesProcessor. The provider conf is set on an
-    //    ISOLATED `newSession()` (shared SparkContext, own SQL conf +
-    //    catalog), so the swap can never leak into a concurrently
-    //    planning query — nothing to restore, the session is discarded.
+    //    see DistinctTypesProcessor, on [[rocksSession]].
     "st12_transform_with_state" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Same state-size shard knob as stateTuned: each shard is one
-      // RocksDB instance OPEN+commit per micro-batch (~0.5 s of task
-      // time each, measured) - 32 shards of fixture-sized state is
-      // pure store-lifecycle overhead.
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_SHARDS", "4").toInt)
+      val s = rocksSession(s0)
       import s.implicits._
       val out = eventStream(s, d)
         .select(col("user_id"), col("event_type")).as[(Long, String)]
@@ -1205,19 +1185,11 @@ object Streams {
     }),
 
     // -- transformWithState with LIST state: per-user 3 most-recent
-    //    events (see LastEventsProcessor). RocksDB provider on an
-    //    isolated newSession as in st12; final rows = the emission
-    //    tagged with the per-key max seen-count.
+    //    events (see LastEventsProcessor), on [[rocksSession]] as in
+    //    st12; final rows = the emission tagged with the per-key max
+    //    seen-count.
     "st13_list_state_recent" -> ((s0, d) => {
-      val s = s0.newSession()
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Same state-size shard knob as stateTuned: each shard is one
-      // RocksDB instance OPEN+commit per micro-batch (~0.5 s of task
-      // time each, measured) - 32 shards of fixture-sized state is
-      // pure store-lifecycle overhead.
-      s.conf.set("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_SHARDS", "4").toInt)
+      val s = rocksSession(s0)
       import s.implicits._
       val out = eventStream(s, d)
         .select(col("user_id"), unix_micros(col("ts")), col("event_id"))
@@ -1250,11 +1222,7 @@ object Streams {
     //    the batch boundary exercise the state-store merge.
     "st14_session_append" -> ((s0, d) => {
       val s = stateTuned(s0)
-      val (feed, schema) = st14Feed(s, d)
-      val agg = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1") // one file per micro-batch
-        .parquet(feed.toString)
+      val agg = feed(s, st14Feed(s, d))
         .withWatermark("ts", "10 minutes")
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -1279,16 +1247,12 @@ object Streams {
     //    as st14: state is per-open-session, bounded by the watermark.
     "st23_dynamic_session_append" -> ((s0, d) => {
       val s = stateTuned(s0)
-      val (feed, schema) = st14Feed(s, d)
       // make_interval: session_window's gap expression must be
       // CalendarIntervalType (q64's discipline).
       val gap = when(col("event_type") === "click",
           expr("make_interval(0, 0, 0, 0, 0, 5, 0)"))
         .otherwise(expr("make_interval(0, 0, 0, 0, 0, 30, 0)"))
-      val agg = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
+      val agg = feed(s, st14Feed(s, d))
         .withWatermark("ts", "10 minutes")
         .groupBy(session_window(col("ts"), gap), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -1317,30 +1281,14 @@ object Streams {
     //    At 100 TB the artifact is cell-partitioned on disk, so a
     //    micro-batch touching few cells reads few directories.
     "st22_stream_ann_serve" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       import graft.operators.Similarity
       val idx = Similarity.ivfIndex(s, d)
-      val (feed, schema) = embFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st22_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Similarity.ivfServePartial(batch, idx)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st22_out")
+      runEach(feed(s, embFeed(s, d))) { (batch, _) =>
+        Similarity.ivfServePartial(batch, idx)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1360,31 +1308,13 @@ object Streams {
     //    verbatim — an index built from a stream answers identically to
     //    one built in batch.
     "st24_stream_index_ingest" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       import graft.operators.Similarity
-      val (feed, schema) = embFeed(s, d)
-      val idxDir = Scratch.dir(s, d, "st24_idx")
-      val compactDir = Scratch.dir(s, d, "st24_idxc")
-      Seq(idxDir, compactDir).foreach { p =>
-        val fsPath = new org.apache.hadoop.fs.Path(p)
-        fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      val idxDir = Scratch.fresh(s, d, "st24_idx")
+      val compactDir = Scratch.fresh(s, d, "st24_idxc")
+      runEach(feed(s, embFeed(s, d))) { (batch, _) =>
+        indexIngestBatch(batch, idxDir)
       }
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          indexIngestBatch(batch, idxDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
       indexCompact(s, idxDir, compactDir)
       Similarity.ivfServePartial(
         graft.sources.Tables.embeddings(s, d), s.read.parquet(compactDir))
@@ -1406,48 +1336,26 @@ object Streams {
     //    the union over batches IS ss02's batch answer — the oracle is
     //    ss02's verbatim.
     "st25_stream_lifecycle" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       import graft.operators.Similarity
-      val (feed, schema) = embFeed(s, d)
-      val rawDir = Scratch.dir(s, d, "st25_raw")
-      val liveDir = Scratch.dir(s, d, "st25_live")
-      val outDir = Scratch.dir(s, d, "st25_out")
-      Seq(rawDir, liveDir, outDir).foreach { p =>
-        val fsPath = new org.apache.hadoop.fs.Path(p)
-        fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      }
-      def feedStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
+      val rawDir = Scratch.fresh(s, d, "st25_raw")
+      val liveDir = Scratch.fresh(s, d, "st25_live")
+      val outDir = Scratch.fresh(s, d, "st25_out")
+      val staged = embFeed(s, d)
+      def feedStream = feed(s, staged)
       // Phase A: ingest, compacting after the first delta lands.
-      val qi = feedStream.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          if (bid == 0L) {
-            indexIngestBatch(batch, rawDir)
-            indexCompact(s, rawDir, liveDir)
-          } else indexIngestBatch(batch, liveDir)
-        }
-        .start()
-      qi.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(feedStream) { (batch, bid) =>
+        if (bid == 0L) {
+          indexIngestBatch(batch, rawDir)
+          indexCompact(s, rawDir, liveDir)
+        } else indexIngestBatch(batch, liveDir)
+      }
       // Phase B: serve every query batch against the base+delta index.
       val idx = s.read.parquet(liveDir)
-      val qs = feedStream.writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Similarity.ivfServePartial(batch, idx)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      qs.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(feedStream) { (batch, _) =>
+        Similarity.ivfServePartial(batch, idx)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1465,32 +1373,16 @@ object Streams {
     //    training corpus — the no-broadcast class). Oracle = ta26's:
     //    stream/batch encode parity is the claim.
     "st26_stream_bpe_encode" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       // wbkt rides along: the batchLocal encode routes each trigger's
       // word buckets into the dict scan (pruned artifact read).
       val dict = graft.operators.Bpe.bpeDict(s, d)
         .select(col("word"), col("s"), col("wbkt"))
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st26_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Bpe.subwordsPartial(batch, dict, batchLocal = true)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st26_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
+        graft.operators.Bpe.subwordsPartial(batch, dict, batchLocal = true)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1509,30 +1401,14 @@ object Streams {
     //    Oracle = dq08's: the monitor's final scores over the full
     //    feed equal the batch audit.
     "st29_stream_drift_monitor" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st29_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.Profile
-            .driftBuckets(batch.select(col("doc_id"), col("n_chars")))
-            .withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st29_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, bid) =>
+        graft.operators.Profile
+          .driftBuckets(batch.select(col("doc_id"), col("n_chars")))
+          .withColumn("batch_id", lit(bid))
+          .write.mode("append").parquet(outDir)
+      }
       val merged = s.read.parquet(outDir)
         .groupBy(col("bucket"), col("batch_id"))
         .agg(max(col("n_ref")).as("n_ref"), max(col("n_cur")).as("n_cur"))
@@ -1553,34 +1429,18 @@ object Streams {
     //    discipline), then runs the SAME operator over the union.
     //    ZERO stream state; oracle = pl07's verbatim.
     "st30_stream_diverse_sample" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       import graft.operators.{Curation, Similarity, TextAnalysis}
-      val (feed, schema) = embFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st30_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
+      val outDir = Scratch.fresh(s, d, "st30_out")
       val ctr = Similarity.kmeansCentroids(s, d)
       // bkt rides along: diversePartial routes each trigger's doc_id
       // buckets into the quality-artifact scan (pruned read).
       val qual = TextAnalysis.stagedQuality(s, d)
         .select(col("doc_id"), col("quality"), col("bkt"))
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          Curation.diversePartial(batch, ctr, qual)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(feed(s, embFeed(s, d))) { (batch, _) =>
+        Curation.diversePartial(batch, ctr, qual)
+          .write.mode("append").parquet(outDir)
+      }
       graft.plans.TopK.topKPerGroup(
         s.read.parquet(outDir).distinct(),
         keys = Seq(col("cid")),
@@ -1602,30 +1462,14 @@ object Streams {
     //    Oracle: every doc scored against the unrolled training's
     //    round-3 weights (c36w3) — the train→serve contract end-to-end.
     "st31_stream_classifier_score" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       import graft.operators.TextAnalysis
       val w = TextAnalysis.trainClassifier(s, d)._2
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st31_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          TextAnalysis.classifierServe(batch, w)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st31_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
+        TextAnalysis.classifierServe(batch, w)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1643,34 +1487,17 @@ object Streams {
     //    state.
     "st32_stream_funnel" -> ((s0, d) => {
       import graft.operators.Curation
-      // st19/st36's micro-batch-width discipline: every per-trigger
-      // relation here is batch-bounded (probes, broadcasts) or a pruned
-      // artifact scan — CPU-width exchanges over them are per-task
-      // fixed overhead, not parallelism.
       val s = stateTuned(s0)
       val dropSet = Curation.stagedDropSet(s, d)
       val canon = Curation.stagedCanon(s, d)
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st32_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Managed variant: the extraction-derived intermediates are
-          // persisted for the trigger; release them after the write.
-          val (rows, done) = Curation.funnelPartialManaged(batch, dropSet, canon)
-          try rows.write.mode("append").parquet(outDir)
-          finally done()
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st32_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
+        // Managed variant: the extraction-derived intermediates are
+        // persisted for the trigger; release them after the write.
+        val (rows, done) = Curation.funnelPartialManaged(batch, dropSet, canon)
+        try rows.write.mode("append").parquet(outDir)
+        finally done()
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1683,28 +1510,12 @@ object Streams {
     //    closed-form oracle verbatim), replays collapse under the
     //    read-back distinct. ZERO stream state, zero exchanges.
     "st33_stream_blob_decode" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st33_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.Multimodal.decodePartial(batch)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st33_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
+        graft.operators.Multimodal.decodePartial(batch)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1721,29 +1532,13 @@ object Streams {
     //    spec pins it) — sketch-with-guarantees, the mergeable shape
     //    a 100 TB feed needs. ZERO stream state.
     "st34_stream_quantile_monitor" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st34_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          graft.operators.Profile.charBuckets(batch)
-            .withColumn("batch_id", lit(bid))
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st34_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, bid) =>
+        graft.operators.Profile.charBuckets(batch)
+          .withColumn("batch_id", lit(bid))
+          .write.mode("append").parquet(outDir)
+      }
       graft.operators.Profile.quantileBucketFinalize(
         s.read.parquet(outDir)
           .groupBy(col("bucket"), col("batch_id"))
@@ -1842,31 +1637,18 @@ object Streams {
       // batch leg's shuffle-hash resolves would re-exchange the
       // artifact every micro-batch).
       val docServe = Curation.stagedDocServe(s, d)
-      val (feed, schema) = embFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st28_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val topk = Similarity.ivfServePartial(batch, idx)
-            .select(col("query_id"), col("neighbor_id"), col("rnk"))
-          // ragAssembleLocal persists the probe internally (it is
-          // referenced several times in the per-batch plan) and hands
-          // back the release hook; invoke it once the sink write has
-          // consumed the result (funnelPartialManaged's contract).
-          val (rows, done) = Curation.ragAssembleLocal(topk, docServe)
-          try rows.write.mode("append").parquet(outDir)
-          finally done()
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st28_out")
+      runEach(feed(s, embFeed(s, d))) { (batch, _) =>
+        val topk = Similarity.ivfServePartial(batch, idx)
+          .select(col("query_id"), col("neighbor_id"), col("rnk"))
+        // ragAssembleLocal persists the probe internally (it is
+        // referenced several times in the per-batch plan) and hands
+        // back the release hook; invoke it once the sink write has
+        // consumed the result (funnelPartialManaged's contract).
+        val (rows, done) = Curation.ragAssembleLocal(topk, docServe)
+        try rows.write.mode("append").parquet(outDir)
+        finally done()
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1880,28 +1662,12 @@ object Streams {
     //    zero exchanges inside the batch plan — the cheapest possible
     //    streaming operator shape. Oracle = ta31's verbatim.
     "st27_stream_chunking" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st27_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          graft.operators.TextAnalysis.chunksOf(batch)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st27_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
+        graft.operators.TextAnalysis.chunksOf(batch)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -1919,11 +1685,8 @@ object Streams {
     //    plain batch LEFT JOIN with the same interval predicate.
     "st16_outer_join" -> ((s0, d) => {
       val s = stateTuned(s0)
-      val (feed, schema) = st16Feed(s, d)
-      def feedStream = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
+      val staged = st16Feed(s, d)
+      def feedStream = feed(s, staged)
       val clicks = feedStream.filter(col("event_type") === "click")
         .select(col("user_id"), col("ts").as("cts"), col("event_id").as("click_id"))
         .withWatermark("cts", "1 hour")
@@ -1965,27 +1728,11 @@ object Streams {
     //    replays change nothing (st07's last-emission discipline).
     //    Oracle = dd01's: stream/batch parity for the dedup relation.
     "st17_stream_exact_dedup" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st17_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1") // one file per micro-batch
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          exactDedupPartial(batch, bid).write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st17_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch, bid) =>
+        exactDedupPartial(batch, bid).write.mode("append").parquet(outDir)
+      }
       exactDedupMerge(s.read.parquet(outDir))
     }),
 
@@ -2004,38 +1751,25 @@ object Streams {
     //    At scale the bench set outgrows a broadcast → swap in dd12's
     //    Bloom probe; the plumbing is identical.
     "st18_stream_decontaminate" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       val bench = graft.operators.Dedup.benchGramSet(s, d)
       val schema = s.read.parquet(s"$d/documents.parquet").schema
-      val outDir = Scratch.dir(s, d, "st18_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(d)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // Single-file fixture arrives as 1-2 input partitions;
-          // redistribute the raw doc rows so every core tokenizes
-          // (a many-file production feed never needs this).
-          val docs = batch.repartition(
-            batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
-          graft.operators.Dedup.gramHashesOf(docs, 8)
-            .filter(col("doc_id") % 10 =!= 0)
-            .distinct()
-            .join(broadcast(bench), "gh")
-            .groupBy(col("doc_id"))
-            .agg(count(lit(1)).as("n_shared"))
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st18_out")
+      runEach(s.readStream.schema(schema)
+          .option("pathGlobFilter", "documents.parquet").parquet(d)) { (batch, _) =>
+        // Single-file fixture arrives as 1-2 input partitions;
+        // redistribute the raw doc rows so every core tokenizes
+        // (a many-file production feed never needs this).
+        val docs = batch.repartition(
+          batch.sparkSession.sparkContext.defaultParallelism, col("doc_id"))
+        graft.operators.Dedup.gramHashesOf(docs, 8)
+          .filter(col("doc_id") % 10 =!= 0)
+          .distinct()
+          .join(broadcast(bench), "gh")
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_shared"))
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir)
         .groupBy(col("doc_id"))
         .agg(max(col("n_shared")).as("n_shared_grams"))
@@ -2061,14 +1795,7 @@ object Streams {
     //    candidates) and id-keyed shingle lookups — at 100 TB the ledger
     //    is a parquet table bucketed by band key.
     "st19_stream_neardup" -> ((s0, d) => {
-      // Micro-batch-sized shuffles: every per-trigger relation here is
-      // batch-bounded or ledger-probe-shaped, so the trigger's band/
-      // verify joins run at the tuned width (state-size knob), not the
-      // session's CPU width — the per-task fixed overhead (measured
-      // ~24 ms deserialize alone) dominates 32-wide exchanges over
-      // fixture-sized batches.
       val s = stateTuned(s0)
-      val (feed, schema) = docsFeed(s, d)
       val (bandsDir, setsDir, outDir) = (
         Scratch.dir(s, d, "st19_bands"),
         Scratch.dir(s, d, "st19_sets"),
@@ -2078,19 +1805,9 @@ object Streams {
       // hits a missing path.
       neardupSeed(graft.sources.Tables.documents(s, d).limit(0),
         bandsDir, setsDir, outDir)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          neardupStep(batch, bandsDir, setsDir, outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
+        neardupStep(batch, bandsDir, setsDir, outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -2104,28 +1821,15 @@ object Streams {
     //    batch all-pairs result (the oracle); replay-idempotent via the
     //    read-back distinct.
     "st36_stream_phash_neardup" -> ((s0, d) => {
-      // st19's micro-batch-width discipline; the blob decode inside
-      // phashStep keeps full CPU width via its own repartition.
       val s = stateTuned(s0)
-      val (feed, schema) = docsFeed(s, d)
       val (bandsDir, outDir) = (
         Scratch.dir(s, d, "st36_bands"),
         Scratch.dir(s, d, "st36_out"))
       phashSeed(graft.sources.Tables.documents(s, d).limit(0),
         bandsDir, outDir)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          phashStep(batch, bandsDir, outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
+        phashStep(batch, bandsDir, outDir)
+      }
       s.read.parquet(outDir).distinct()
     }),
 
@@ -2140,9 +1844,6 @@ object Streams {
     //    ingest-time semantic contamination gate: map-side cell-local
     //    cosine, corpus never shuffles, sink bucketable by vec_id.
     "st20_stream_embed_decontaminate" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       val bucket = expr(
         "cast(conv(substring(md5(cast(vec_id as string)), 1, 8), 16, 10) as bigint) % 100")
@@ -2154,34 +1855,21 @@ object Streams {
       val evalSide = v.filter(col("b") >= 90)
         .select(col("label"), col("vec_id").as("eval_id"),
           col("e").as("ee"), col("nrm").as("enrm"))
-      val (feed, schema) = embFeed(s, d)
-      val outDir = Scratch.dir(s, d, "st20_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          batch
-            .select(col("vec_id"), col("label"), col("embedding").as("e"))
-            .withColumn("nrm",
-              graft.functions.VectorFunctions.vecDot(col("e"), col("e")))
-            .withColumn("b", bucket)
-            .filter(col("b") < 90)
-            .join(broadcast(evalSide), Seq("label"))
-            .select(col("vec_id"), col("eval_id"),
-              round(graft.functions.VectorFunctions.vecDot(col("e"), col("ee"))
-                / sqrt(col("nrm") * col("enrm")), 6).as("cos"))
-            .filter(col("cos") >= 0.4)
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "st20_out")
+      runEach(feed(s, embFeed(s, d))) { (batch, _) =>
+        batch
+          .select(col("vec_id"), col("label"), col("embedding").as("e"))
+          .withColumn("nrm",
+            graft.functions.VectorFunctions.vecDot(col("e"), col("e")))
+          .withColumn("b", bucket)
+          .filter(col("b") < 90)
+          .join(broadcast(evalSide), Seq("label"))
+          .select(col("vec_id"), col("eval_id"),
+            round(graft.functions.VectorFunctions.vecDot(col("e"), col("ee"))
+              / sqrt(col("nrm") * col("enrm")), 6).as("cos"))
+          .filter(col("cos") >= 0.4)
+          .write.mode("append").parquet(outDir)
+      }
       s.read.parquet(outDir).distinct()
         .groupBy(col("vec_id"))
         .agg(count(lit(1)).as("n_eval_matches"), max(col("cos")).as("max_cos"))
@@ -2243,36 +1931,20 @@ object Streams {
     //    merge is one key-shuffle with map-side combine, and the bench
     //    set swaps to dd12's Bloom when it outgrows a broadcast.
     "pl04_stream_curation" -> ((s0, d) => {
-      // Micro-batch-width discipline (st19/st36): per-trigger relations
-      // here are batch-bounded; exchanges run at the state-shard width,
-      // while CPU-heavy passes keep scan/explicit-repartition width.
       val s = stateTuned(s0)
       import graft.operators.Dedup
       val bench = Dedup.benchGramSet(s, d)
-      val (feed, schema) = docsFeed(s, d)
-      val outDir = Scratch.dir(s, d, "pl04_out")
-      val fsPath = new org.apache.hadoop.fs.Path(outDir)
-      fsPath.getFileSystem(s.sparkContext.hadoopConfiguration).delete(fsPath, true)
-      val q = s.readStream.schema(schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(feed.toString)
-        .writeStream
-        .outputMode(OutputMode.Append())
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch0: DataFrame, bid: Long) =>
-          val batch = batch0
-            .repartition(batch0.sparkSession.sparkContext.defaultParallelism,
-              col("doc_id"))
-            .persist()
-          curationPartial(batch, bid, bench)
-            .write.mode("append").parquet(outDir)
-          batch.unpersist(blocking = false)
-          ()
-        }
-        .start()
-      q.awaitTermination()
-      org.apache.spark.sql.graft.CatalystBridge.unloadStateStores()
+      val outDir = Scratch.fresh(s, d, "pl04_out")
+      runEach(feed(s, docsFeed(s, d))) { (batch0, bid) =>
+        val batch = batch0
+          .repartition(batch0.sparkSession.sparkContext.defaultParallelism,
+            col("doc_id"))
+          .persist()
+        curationPartial(batch, bid, bench)
+          .write.mode("append").parquet(outDir)
+        batch.unpersist(blocking = false)
+        ()
+      }
       curationMerge(s.read.parquet(outDir))
     })
   )

@@ -248,4 +248,55 @@ class StreamingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got === exp, "streaming top-k diverges from batch")
   }
+
+  // The memory sink registers a temp view of the query name on the run's
+  // session. runToTable resolves its frame from that view and drops it,
+  // so the memoized tuned session accumulates neither views nor the sink
+  // rows they hold, and the frames already returned keep their rows.
+  test("bounded memory-sink runs leave no temp view in the tuned session") {
+    val st02 = Streams.queries("st02_stream_dedup")
+    val first = st02(spark, sfDir)
+    val second = st02(spark, sfDir)
+    val pp02 = graft.SparkEntry.queries("pp02_stream_diamond")(spark, sfDir)
+    val views = Streams.stateTuned(spark).catalog.listTables().collect()
+      .filter(_.isTemporary).map(_.name)
+      .filter(n => n.startsWith("graft_stream_") || n.startsWith("graft_pp_sink_"))
+    assert(views.isEmpty, s"temp views left behind: ${views.mkString(", ")}")
+    val ev = graft.sources.Tables.events(spark, sfDir)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    val dedup = rows(ev.select(col("user_id"), col("event_type")).distinct()
+      .groupBy(col("event_type")).agg(count(lit(1)).as("n_users")))
+    assert(rows(first) === dedup)
+    assert(rows(second) === dedup)
+    def agg(k: org.apache.spark.sql.Column, metric: String) =
+      ev.groupBy(k.cast("string").as("k"))
+        .agg(count(lit(1)).as("n"), sum(graft.Exprs.cents(col("value"))).as("v"))
+        .select(lit(metric).as("metric"), col("k"), col("n"), col("v"))
+    assert(rows(pp02) ===
+      rows(agg(col("event_type"), "by_type").unionByName(agg(col("user_id"), "by_user"))))
+  }
+
+  // One bounded runner: Streams.run owns the only writeStream/start in
+  // the library, so checkpoint, trigger and state-store policy cannot
+  // drift between hand-rolled copies again.
+  test("every bounded stream is started by Streams.run") {
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+      else Seq(f)
+    def text(f: java.io.File) =
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val sources = walk(root).filter(_.getName.endsWith(".scala"))
+    val (streams, others) =
+      sources.partition(_.getPath.endsWith("graft/streaming/Streams.scala"))
+    assert(streams.size === 1)
+    val offenders = others.filter(f => text(f).contains(".writeStream"))
+    assert(offenders.isEmpty,
+      "run bounded streams through graft.streaming.Streams instead: " +
+        offenders.mkString(", "))
+    val starts = text(streams.head).split(java.util.regex.Pattern.quote(".start()"), -1)
+      .length - 1
+    assert(starts === 1, s"Streams.scala has $starts .start() calls; route them through run")
+  }
 }
