@@ -128,27 +128,45 @@ object Streams {
     * sized batch is per-task fixed overhead (measured ~24 ms deserialize
     * alone), not parallelism; CPU-heavy passes keep their scan width or
     * repartition explicitly (phashStep's decode, st18's tokenize). */
-  private val tunedSessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
-  private[graft] def stateTuned(s0: SparkSession): SparkSession =
-    tunedSessions.computeIfAbsent(s0, s => {
-      val t = s.newSession()
-      t.conf.set("spark.sql.shuffle.partitions", stateShards)
-      t
-    })
+  private[graft] def stateTuned(s0: SparkSession): SparkSession = owned(s0, tuned = true)
+
+  /** [[stateTuned]]'s sibling at the caller's shuffle width, for runs with
+    * corpus-scale triggers (st28's serving, the st35/st37–st39 builds). */
+  private[graft] def callerWidth(s0: SparkSession): SparkSession = owned(s0, tuned = false)
+
+  private val ownedSessions =
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, Boolean), SparkSession]()
+  private def owned(s0: SparkSession, tuned: Boolean): SparkSession =
+    ownedSessions.computeIfAbsent((s0, tuned), _ => streamingSession(s0,
+      if (tuned) stateShards.toString else s0.conf.get("spark.sql.shuffle.partitions")))
+
+  /** Every session a bounded run uses is made here ([[run]] refuses any
+    * other). Its checkpoint files go through [[LocalCheckpointFileManager]]
+    * (no forked `chmod`/`readlink`), and artifact isolation is off (it
+    * counts only if set before first use; graft adds no artifacts), so a
+    * query's tasks run on the executor's default classloader and hit
+    * `CodeGenerator`'s classloader-keyed cache instead of recompiling. */
+  private def streamingSession(s0: SparkSession, width: String): SparkSession = {
+    val s = s0.newSession()
+    s.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    s.conf.set(LocalCheckpointFileManager.ConfKey, classOf[LocalCheckpointFileManager].getName)
+    s.conf.set("spark.sql.shuffle.partitions", width)
+    s
+  }
 
   /** st12/st13's session: a fresh isolated `newSession()` per call on
     * the RocksDB state-store provider (the only one transformWithState
     * supports), so the provider swap never leaks into a concurrently
     * planning query — nothing to restore, the session is discarded.
     * Same [[stateShards]] width as [[stateTuned]]: each shard is one
-    * RocksDB instance OPEN+commit per micro-batch (~0.5 s of task time
-    * each, measured). */
-  private def rocksSession(s0: SparkSession): SparkSession = {
-    val s = s0.newSession()
+    * RocksDB instance load and commit per micro-batch. The ~0.5 s of
+    * task time once measured per shard included forks (st12: 189 per
+    * run, 153 under the checkpoint manager) and 25–30 recompiled
+    * classes per run, on tmpfs too, until [[streamingSession]]. */
+  private[graft] def rocksSession(s0: SparkSession): SparkSession = {
+    val s = streamingSession(s0, stateShards.toString)
     s.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    s.conf.set("spark.sql.shuffle.partitions", stateShards)
     s
   }
 
@@ -170,16 +188,16 @@ object Streams {
 
   /** Checkpoint root for every bounded run ([[run]]).
     * These checkpoints are EPHEMERAL by design (Spark's own temporary-
-    * checkpoint path deletes them after a clean run); what they are NOT
-    * is cheap: every stateful shard pays per-micro-batch delta-commit
-    * fsyncs, and a stream-stream join keeps 4 stores per shard per
-    * side — measured on st16 as 21 s of task runtime with 2 s of CPU,
-    * i.e. almost pure state-store commit I/O against the disk-backed
-    * default tmpdir. A RAM-backed root (tmpfs) removes that disk I/O
-    * without changing semantics — the lifecycle stays create-run-delete
-    * inside one call. Production durable checkpoints live on real
-    * storage and are configured explicitly; SPARK_GRAFT_CKPT_DIR
-    * overrides (e.g. for hosts without /dev/shm). */
+    * checkpoint path deletes them after a clean run); a RAM-backed root
+    * (tmpfs) keeps them off the disk without changing semantics — the
+    * lifecycle stays create-run-delete inside one call. st16's "21 s
+    * of task runtime with 2 s of CPU" was not disk I/O: its runs waited
+    * on forked processes, a `chmod` per checkpoint file and dir and two
+    * `readlink` per rename (1,513 per st16 run at sf0.01), and compiled
+    * their generated classes again. Both occur on tmpfs too, and
+    * [[streamingSession]] removes them. Production durable
+    * checkpoints live on real storage and are configured explicitly;
+    * SPARK_GRAFT_CKPT_DIR overrides (e.g. for hosts without /dev/shm). */
   private[graft] lazy val ckptRoot: String = {
     val base = sys.env.get("SPARK_GRAFT_CKPT_DIR").orElse {
       val shm = new java.io.File("/dev/shm")
@@ -199,9 +217,13 @@ object Streams {
     * stream-stream join buffers the whole watermark window; a JVM running
     * many bounded queries would otherwise hold all of it). The unload is
     * JVM-wide, so only the last run in flight performs it (pp02 drains
-    * two queries at once). Returns the query name. */
+    * two queries at once). Refuses a session not made by
+    * [[streamingSession]]. Returns the query name. */
   private def run[T](ds: Dataset[T], mode: OutputMode, prefix: String)(
       sink: DataStreamWriter[T] => DataStreamWriter[T]): String = {
+    require(ds.sparkSession.conf.getOption(LocalCheckpointFileManager.ConfKey)
+        .contains(classOf[LocalCheckpointFileManager].getName),
+      "bounded runs need a session from Streams' factory (stateTuned or its siblings)")
     val name = s"${prefix}_${nameSeq.incrementAndGet()}"
     val ckpt = new java.io.File(ckptRoot,
       s"graft_ckpt_${ds.sparkSession.sparkContext.applicationId}_$name")
@@ -441,7 +463,8 @@ object Streams {
     * a consumer pays. Oracle: pl11's — the full from-scratch recompute
     * over the final corpus, which the streamed nights must converge to
     * exactly. */
-  private def pl11StreamRun(s: SparkSession, d: String): graft.operators.Incremental.Dirs = {
+  private def pl11StreamRun(s0: SparkSession, d: String): graft.operators.Incremental.Dirs = {
+    val s = callerWidth(s0)
     import graft.operators.Incremental
     val root = Scratch.dir(s, d, "st35_root")
     Scratch.memo(root) {
@@ -499,7 +522,8 @@ object Streams {
     * replay maps to the same marker and is a structural no-op).
     * Memoized per (app, fixture); oracle = the funnel recompute over
     * the survivors of BOTH purges. */
-  private def st37StreamRun(s: SparkSession, d: String): graft.operators.Incremental.Dirs = {
+  private def st37StreamRun(s0: SparkSession, d: String): graft.operators.Incremental.Dirs = {
+    val s = callerWidth(s0)
     import graft.operators.Incremental
     val root = Scratch.dir(s, d, "st37_root")
     Scratch.memo(root) {
@@ -540,7 +564,8 @@ object Streams {
     * already rewrote — the stale-side-artifact rot point). Memoized
     * per (app, fixture); oracle = every artifact REBUILT over the
     * survivors of BOTH purges. */
-  private def st39StreamRun(s: SparkSession, d: String): String = {
+  private def st39StreamRun(s0: SparkSession, d: String): String = {
+    val s = callerWidth(s0)
     import graft.operators.Incremental
     val root = Scratch.dir(s, d, "st39_root")
     Scratch.memo(root) {
@@ -622,7 +647,8 @@ object Streams {
     * .Similarity.probeWithTombstones]]), so deletes are visible even
     * between a ledger append and its compaction. Memoized per (app,
     * fixture); oracle = ss02's exact probe over the survivors. */
-  private[graft] def st38StreamRun(s: SparkSession, d: String): (String, String) = {
+  private[graft] def st38StreamRun(s0: SparkSession, d: String): (String, String) = {
+    val s = callerWidth(s0)
     import graft.operators.Similarity
     val live = Scratch.dir(s, d, "st38_live")
     val tombDir = Scratch.dir(s, d, "st38_tomb")
@@ -1627,8 +1653,9 @@ object Streams {
     //    whichever batch it arrives — union over batches ≡ pl06's
     //    batch answer (the oracle), replays append byte-identical rows
     //    collapsed by the read-back distinct. ZERO stream state.
-    "st28_stream_rag_serve" -> ((s, d) => {
+    "st28_stream_rag_serve" -> ((s0, d) => {
       import graft.operators.{Bpe, Curation, Similarity}
+      val s = callerWidth(s0)
       val idx = Similarity.ivfIndex(s, d)
       // The doc-resolve lookup artifact (doc_id → (n_subwords, text))
       // is bucket-partitioned by doc_id; ragAssembleLocal routes each

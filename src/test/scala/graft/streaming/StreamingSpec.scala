@@ -299,4 +299,39 @@ class StreamingSpec extends SparkSpec {
       .length - 1
     assert(starts === 1, s"Streams.scala has $starts .start() calls; route them through run")
   }
+
+  // Every bounded run goes through a session that (a) keeps checkpoint
+  // files on the fork-free manager and (b) runs its tasks on the
+  // executor's default classloader, so CodeGenerator's cache (keyed by
+  // classloader) serves a repeated run instead of recompiling it.
+  test("repeated bounded runs compile no generated class again") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val sessions = Seq(Streams.stateTuned(spark), Streams.callerWidth(spark),
+      Streams.rocksSession(spark))
+    sessions.foreach { s =>
+      assert(s.conf.get(LocalCheckpointFileManager.ConfKey) ===
+        classOf[LocalCheckpointFileManager].getName)
+      assert(s.conf.get("spark.sql.artifact.isolation.enabled") === "false")
+    }
+    // Each query runs twice in a row: the three together generate about
+    // 90 classes, enough to evict from the cache's 100 entries (Guava
+    // evicts per segment) and make the guard depend on test order.
+    def compiled(n: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      graft.SparkEntry.queries(n)(spark, sfDir).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val again = Seq("st02_stream_dedup", "st12_transform_with_state", "pp02_stream_diamond")
+      .map { n => compiled(n); n -> compiled(n) }
+    assert(again.forall(_._2 == 0), s"classes compiled on the second run: $again")
+  }
+
+  test("a bounded run refuses a session the streaming factory did not make") {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[Long]
+    val e = intercept[IllegalArgumentException](
+      Streams.runToTable(mem.toDS(), OutputMode.Append()))
+    assert(e.getMessage.contains("Streams' factory"))
+    assert(spark.streams.active.isEmpty)
+  }
 }
