@@ -44,16 +44,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Harness parallelism: 32 per the target environment (local[32]);
-    // SPARK_GRAFT_CPUS overrides for constrained dev runs.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = SparkEntry.harnessCpus
+    val spark = SparkEntry.localSession(cpus)
     // Pre-build failures are WARNINGS in the result JSON, not just
     // stderr noise: a failed staging hook silently moves the staging
     // cost (or the original error) into the timed loop, and the output

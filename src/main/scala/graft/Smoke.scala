@@ -1,17 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** t1-smoke analog: runs SparkEntry.entry exactly as the driver does and
   * prints the row count (driver checks rows > 0). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession("4")
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry rows=${df.count()}")
     df.show(5, truncate = 60)

@@ -17,6 +17,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     graft.pipeline.MiniGrep.run(spark, "/root/testdata/sf0.001", "spark")
 
+  /** The one SparkSession builder, shared by the mains (Bench, Verify,
+    * Smoke, DevScaleFixture) and the test base: `local[cpus]` with the
+    * shuffle width matched to it, UTC, no UI, WARN logging. */
+  private[graft] def localSession(cpus: String,
+      appName: Option[String] = None): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    val s = appName.fold(b)(b.appName).getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** The mains' width: 32 per the target environment (local[32]);
+    * SPARK_GRAFT_CPUS overrides for constrained dev runs. */
+  private[graft] def harnessCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     graft.operators.Relational.queries ++

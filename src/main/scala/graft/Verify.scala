@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,16 +8,7 @@ object Verify {
     // Optional third arg (dev only): comma-separated name prefixes to run
     // a subset — the driver always calls with two args (all queries).
     val prefixes = if (args.length > 2) args(2).split(",").toSeq else Seq("")
-    // Harness parallelism: 32 per the target environment (local[32]);
-    // SPARK_GRAFT_CPUS overrides for constrained dev runs.
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(SparkEntry.harnessCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => prefixes.exists(name.startsWith) }

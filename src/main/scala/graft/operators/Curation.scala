@@ -491,17 +491,13 @@ object Curation {
     * of the batch-bounded resolved rows. Same [[ragPack]] tail, so
     * stream ≡ batch. */
   private[graft] def ragAssembleLocal(
-      topk: DataFrame, docServe: DataFrame): (DataFrame, () => Unit) = {
+      topk: DataFrame, docServe: DataFrame): DataFrame = {
     // The probe is referenced twice per trigger (bucket-routing collect
     // + the broadcast build); uncached, each reference re-runs the
     // upstream IVF probe — measured 2.6× on st28's trigger time. It is
-    // batch-bounded (queries × k rows) by construction, so caching it
-    // is a few KB per trigger. The cache is persisted HERE and released
-    // by the returned hook (funnelPartialManaged's contract): the
-    // persist target and the unpersist call live in one place, so a
-    // future change that persists a derived frame instead cannot
-    // silently split the cache lifetime across modules.
-    val cached = topk.persist()
+    // batch-bounded (queries × k rows) by construction, so materializing
+    // it is a few KB per trigger, released with the returned frame.
+    val cached = CatalystBridge.materialized(topk)
     val bkts = cached
       .select(pmod(col("neighbor_id"), lit(B.toLong)).cast("int"))
       .distinct().collect().map(_.getInt(0)).toSeq
@@ -511,7 +507,7 @@ object Curation {
     val rows = ragPack(pruned
       .select(col("doc_id").as("neighbor_id"), col("n_subwords"), col("text"))
       .join(broadcast(cached), Seq("neighbor_id")))
-    (rows, () => { cached.unpersist(blocking = false); () })
+    rows
   }
 
   /** pl05's injected markup constants — shared verbatim by the oracle
@@ -673,26 +669,15 @@ object Curation {
     * by micro-batch size), and the anti/flag joins then run against the
     * batch-bounded results of those probes. At rest the artifacts are
     * written once; each trigger costs two artifact scans with pushed
-    * broadcast probes, zero artifact shuffles. */
-  /** TEST-ONLY convenience over [[funnelPartialManaged]] that DISCARDS
-    * the cache-release hook — the persisted per-batch intermediates
-    * stay in the block-manager cache until the session ends, so every
-    * production caller (st32's foreachBatch) must go through the
-    * managed variant and invoke the hook after its sink write. Kept for
-    * plan-inspection specs, where the leak is one spec-bounded batch. */
-  private[graft] def funnelPartial(batch: DataFrame, dropSet: DataFrame,
-      canon: DataFrame): DataFrame = funnelPartialManaged(batch, dropSet, canon)._1
-
-  /** [[funnelPartial]] plus its cache-release hook: the per-batch plan
+    * broadcast probes, zero artifact shuffles. The per-batch plan
     * references the extraction-derived relations several times (bucket
     * routing collects + broadcast builds + the final join) and the
-    * markup extraction is the trigger's expensive pass — uncached, it
+    * markup extraction is the trigger's expensive pass — unshared, it
     * re-ran ~5× per trigger (measured 2.7× on st32's trigger time), so
-    * the two batch-bounded intermediates are persisted for the
-    * trigger's duration. The caller invokes the hook once its sink
-    * write has consumed the result (st17's unpersist discipline). */
-  private[graft] def funnelPartialManaged(batch: DataFrame, dropSet: DataFrame,
-      canon: DataFrame): (DataFrame, () => Unit) = {
+    * the two batch-bounded intermediates are materialized once per
+    * trigger and released with the result. */
+  private[graft] def funnelPartial(batch: DataFrame, dropSet: DataFrame,
+      canon: DataFrame): DataFrame = {
     // Per-trigger job structure (the r13 verdict's st32 item): the old
     // shape paid 2 routeBuckets COLLECT jobs + 5 broadcast builds per
     // trigger, and the collected bucket lists were embedded as isin()
@@ -705,9 +690,9 @@ object Curation {
     // IN-PLAN as a union/max trick instead of a fifth broadcast build.
     // The EXTRACTION (markup strip + density gates) is the trigger's
     // expensive pass and is referenced from two subtrees → it is the
-    // relation persisted for the trigger (the bh hash pass re-derives
+    // relation materialized for the trigger (the bh hash pass re-derives
     // from it cheaply).
-    val blocksDf = webBlocksOf(batch).persist()
+    val blocksDf = CatalystBridge.materialized(webBlocksOf(batch))
     val bh = bhOf(blocksDf)
       .withColumn("bkt", pmod(col("bh"), lit(B)).cast("int"))
     // Which of the batch's block hashes are corpus-boilerplate: batch
@@ -726,9 +711,9 @@ object Curation {
       .filter(col("h") === 0)
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(col("idx"))).as("kept_idx"))
-    val scored = cleanedScoredOf(blocksDf, kept, batchLocal = true)
-      .withColumn("ck", md5(col("txt")))
-      .persist()
+    val scored = CatalystBridge.materialized(
+      cleanedScoredOf(blocksDf, kept, batchLocal = true)
+        .withColumn("ck", md5(col("txt"))))
     // Canonical ids for the batch's content keys (a non-passing doc's
     // ck cannot be in the canonical map — identical txt ⇒ identical q
     // on both docs). Same broadcast-probe-into-artifact shape.
@@ -737,17 +722,12 @@ object Curation {
         .select(col("ck"), pmod(hash(col("ck")), lit(B)).as("bkt")).distinct()),
         Seq("bkt", "ck"))
       .select(col("ck"), col("canon_id"))
-    val out = scored.join(broadcast(cf), Seq("ck"), "left")
+    scored.join(broadcast(cf), Seq("ck"), "left")
       .select(col("doc_id"), col("lang"),
         when(col("n_kept") === 0, "boilerplate_only")
           .when(col("q") < 0.5, "low_quality")
           .when(col("doc_id") =!= col("canon_id"), "duplicate")
           .otherwise("kept").as("stage"))
-    (out, () => {
-      blocksDf.unpersist(blocking = false)
-      scored.unpersist(blocking = false)
-      ()
-    })
   }
 
   /** The pl05 per-doc CTE chain (markup wrap, extraction, paragraph

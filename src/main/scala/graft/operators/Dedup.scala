@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.CatalystBridge
 import graft.sources.{Scratch, Tables}
 import scala.collection.concurrent.TrieMap
 
@@ -466,33 +467,23 @@ object Dedup {
     // (round r's estimate ~ round r-1's raised to the joins-per-round;
     // by ~round 12 physical planning hangs multiplying million-digit
     // BigInts — observed on mm11's pair graph). Row-conversion cost is
-    // O(edges) per round — pair-graph-sized, a corpus fraction.
-    // fresh() returns the rebuilt frame PLUS the checkpoint's cached-RDD
-    // handle so the loop can FREE superseded rounds immediately: left to
-    // the async context cleaner, ~one dead checkpoint RDD per round
-    // survives the loop and is reaped during whatever query runs NEXT —
-    // measured as +0.6–0.9 s of block-manager/cleaner churn on the
-    // FOLLOWING query (the round-9 dq05 watch item: dq05 sits right
-    // after dd09 in the bench's alphabetical order).
-    def fresh(df: DataFrame)
-        : (DataFrame, Option[org.apache.spark.rdd.RDD[_]]) = {
+    // O(edges) per round — pair-graph-sized, a corpus fraction. A
+    // superseded round's checkpoint blocks are dropped by the
+    // ContextCleaner once its frame is unreachable.
+    def fresh(df: DataFrame): DataFrame = {
       val cp = df.localCheckpoint()
-      val handle = cp.queryExecution.logical.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      (loop.createDataFrame(cp.rdd, cp.schema), handle)
+      loop.createDataFrame(cp.rdd, cp.schema)
     }
     {
       // The input pair plan (often an upstream banded join) is read
-      // twice (vertex set + edge set) — persist for the two reads.
-      val p = pairs.persist()
-      val (verts, vertsH) = fresh(p.select(col("doc_a").as("id"))
+      // twice (vertex set + edge set) — materialized for the two reads.
+      val p = CatalystBridge.materialized(pairs)
+      val verts = fresh(p.select(col("doc_a").as("id"))
         .union(p.select(col("doc_b").as("id"))).distinct())
       // Edges oriented large -> small, deduped, self-loops dropped.
-      var (e, eH) = fresh(p.filter(col("doc_a") =!= col("doc_b"))
+      var e = fresh(p.filter(col("doc_a") =!= col("doc_b"))
         .select(greatest(col("doc_a"), col("doc_b")).as("u"),
           least(col("doc_a"), col("doc_b")).as("v")).distinct())
-      p.unpersist(blocking = false)
       // One bounded count job sizes the loop's shuffle width.
       val nEdges = e.count()
       loop.conf.set("spark.sql.shuffle.partitions",
@@ -527,7 +518,7 @@ object Dedup {
           .filter(col("v") =!= col("m"))
           .select(col("v").as("u"), col("m").as("v"))
           .unionByName(ssMin.select(col("u"), col("m").as("v")))
-        val (next, nextH) = fresh(star.filter(col("u") =!= col("v")).distinct())
+        val next = fresh(star.filter(col("u") =!= col("v")).distinct())
         // Fixpoint test, two-tier: both sets are DISTINCT, so unequal
         // COUNTS prove inequality without touching row contents — and
         // the count is near-free here (fresh() just materialized next
@@ -543,11 +534,7 @@ object Dedup {
             .groupBy(col("u"), col("v")).agg(count(lit(1)).as("c"))
             .filter(col("c") === 1).isEmpty
         prevEdgeCount = nextEdgeCount
-        // The superseded round's checkpoint blocks are dead the moment
-        // `e` is reassigned — free them NOW, inside dd09's own clock.
-        eH.foreach(_.unpersist(blocking = false))
         e = next
-        eH = nextH
         rounds += 1
       }
       // A silent non-converged exit would emit WRONG clusters (a
@@ -559,11 +546,8 @@ object Dedup {
       val out = verts.join(e, verts("id") === e("u"), "left")
         .select(col("id").as("doc_id"),
           coalesce(col("v"), col("id")).as("canonical_id"))
-        .localCheckpoint() // eager: materialized before the frees below
-      val res = ss.createDataFrame(out.rdd, out.schema)
-      eH.foreach(_.unpersist(blocking = false))
-      vertsH.foreach(_.unpersist(blocking = false))
-      res
+        .localCheckpoint()
+      ss.createDataFrame(out.rdd, out.schema)
     }
   }
 

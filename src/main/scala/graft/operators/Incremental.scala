@@ -4,6 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.CatalystBridge.materialized
 import graft.sources.{Scratch, Tables}
 
 /** pl11 — INCREMENTAL CORPUS-SNAPSHOT CURATION (SURVEY.md §2.5,
@@ -846,7 +847,7 @@ object Incremental {
         partOf(col("doc_id")).as("part"))
       .write.mode("overwrite").partitionBy("part").parquet(d.docs)
     val blocks = Curation.webBlocksOf(s.read.parquet(d.docs))
-    val bhPost = Curation.bhOf(blocks).persist()
+    val bhPost = materialized(Curation.bhOf(blocks))
     bhPost.select(col("doc_id"), col("bh"), bhBktOf(col("bh")).as("bhbkt"))
       .write.mode("overwrite").partitionBy("bhbkt").parquet(d.bh)
     bhPost.select(col("doc_id"), col("bh")).distinct()
@@ -855,9 +856,8 @@ object Incremental {
       .write.mode("overwrite").partitionBy("bhbkt").parquet(d.df)
     val scored = scoredFromBh(blocks, bhPost,
       s.read.parquet(d.df).filter(col("n") >= MinDf).select(col("bh")))
-    val ckPost = scored.filter(col("q") >= 0.5)
-      .select(col("doc_id"), col("ck"), partOf(col("doc_id")).as("part"))
-      .persist()
+    val ckPost = materialized(scored.filter(col("q") >= 0.5)
+      .select(col("doc_id"), col("ck"), partOf(col("doc_id")).as("part")))
     ckPost.withColumn("ckbkt", ckBktOf(col("ck")))
       .write.mode("overwrite").partitionBy("part", "ckbkt").parquet(d.ck)
     ckPost.groupBy(col("ck"), col("part")).agg(min(col("doc_id")).as("min_id"))
@@ -867,8 +867,6 @@ object Incremental {
       .groupBy(col("ck")).agg(min(col("min_id")).as("canon_id"))
     stagesOf(scored, canon)
       .write.mode("overwrite").partitionBy("part").parquet(d.table)
-    ckPost.unpersist(blocking = false)
-    bhPost.unpersist(blocking = false)
     // Initial snapshot listings — nights then commit a new version per
     // published artifact, and pinned readers never see a torn tree.
     Seq(d.table, d.docs, d.bh, d.df, d.ck, d.cm).foreach { a =>
@@ -902,7 +900,7 @@ object Incremental {
     deltaD.withColumn("part", lit(p))
       .write.mode("overwrite").partitionBy("part").parquet(st("docs"))
     val deltaBlocks = Curation.webBlocksOf(deltaD)
-    val deltaBh = Curation.bhOf(deltaBlocks).persist()
+    val deltaBh = materialized(Curation.bhOf(deltaBlocks))
     deltaBh.select(col("doc_id"), col("bh"), bhBktOf(col("bh")).as("bhbkt"))
       .write.mode("overwrite").partitionBy("bhbkt").parquet(st("bh"))
     // Additive df merge over the TOUCHED buckets only: old counts from
@@ -924,9 +922,9 @@ object Incremental {
       .localCheckpoint()
     // Crossed hashes fall out of the same merge: total df reaches MinDf,
     // pre-delta df did not (df only grows — append-only corpus).
-    val crossed = merged
+    val crossed = materialized(merged
       .filter(col("n_old") < MinDf && col("n_new") >= MinDf)
-      .select(col("bh")).persist()
+      .select(col("bh")))
     merged.select(col("bh"), col("n_new").as("n"), bhBktOf(col("bh")).as("bhbkt"))
       .write.mode("overwrite").partitionBy("bhbkt").parquet(st("df"))
     // Post-merge df VIEW (the staged artifact is unpublished): pre-state
@@ -947,9 +945,9 @@ object Incremental {
         crossed.select(bhBktOf(col("bh"))))
       .join(crossed.hint("shuffle_hash"), Seq("bh"))
       .select(col("doc_id"))
-    val affDocs = aff1
+    val affDocs = materialized(aff1
       .unionByName(deltaD.select(col("doc_id")))
-      .distinct().persist()
+      .distinct())
     val affParts1 = affDocs.select(partOf(col("doc_id")).as("part"))
       .distinct().collect().map(_.getInt(0)).toSeq
     // Snapshot VIEW including the unpublished delta: pre-state shard
@@ -966,15 +964,15 @@ object Incremental {
     val affDocsFull = docsView(affParts1)
       .join(affDocs.hint("shuffle_hash"), Seq("doc_id"))
     val affBlocks = Curation.webBlocksOf(affDocsFull)
-    val affBh = Curation.bhOf(affBlocks).persist()
+    val affBh = materialized(Curation.bhOf(affBlocks))
     val scoredAff = scoredFromBh(affBlocks, affBh, dropFrom(dfView, affBh))
     val oldCks = s.read.parquet(d.ck)
       .filter(col("part").isin(affParts1: _*))
       .join(affDocs.hint("shuffle_hash"), Seq("doc_id"))
       .select(col("ck"))
-    val changedCks = oldCks
+    val changedCks = materialized(oldCks
       .unionByName(scoredAff.filter(col("q") >= 0.5).select(col("ck")))
-      .distinct().persist()
+      .distinct())
     // ck → member shards through the canonical-min PARTIALS (pruned to
     // the changed keys' buckets) — the ck postings stay doc-keyed.
     val aff2Parts = Scratch.routeBuckets(s.read.parquet(d.cm), "ckbkt",
@@ -989,8 +987,8 @@ object Incremental {
     // ---- Rewrite ONLY the affected shards (still staged) ------------
     val rwDocs = docsView(affectedParts)
     val rwBlocks = Curation.webBlocksOf(rwDocs)
-    val rwBh = Curation.bhOf(rwBlocks).persist()
-    val scoredRw = scoredFromBh(rwBlocks, rwBh, dropFrom(dfView, rwBh)).persist()
+    val rwBh = materialized(Curation.bhOf(rwBlocks))
+    val scoredRw = materialized(scoredFromBh(rwBlocks, rwBh, dropFrom(dfView, rwBh)))
     val ckNew = scoredRw.filter(col("q") >= 0.5)
       .select(col("doc_id"), col("ck"), partOf(col("doc_id")).as("part"))
     val cmNew = ckNew.groupBy(col("ck"), col("part"))
@@ -1011,8 +1009,6 @@ object Incremental {
       .write.mode("overwrite").partitionBy("part", "ckbkt").parquet(st("ck"))
     cmNew.withColumn("ckbkt", ckBktOf(col("ck")))
       .write.mode("overwrite").partitionBy("part", "ckbkt").parquet(st("cm"))
-    Seq(scoredRw, rwBh, changedCks, affDocs, affBh, crossed, deltaBh)
-      .foreach(_.unpersist(blocking = false))
     failIf(d.root, "pre-manifest")
     // ---- Phase 2 + 3: commit, publish, clean the staging -------------
     commitNight(d, stage,
@@ -1173,11 +1169,11 @@ object Incremental {
     val aff1Full = docsView(aff1Parts)
       .join(aff1.hint("shuffle_hash"), Seq("doc_id"))
     val aff1Blocks = Curation.webBlocksOf(aff1Full)
-    val aff1Bh = Curation.bhOf(aff1Blocks).persist()
+    val aff1Bh = materialized(Curation.bhOf(aff1Blocks))
     val scoredAff = scoredFromBh(aff1Blocks, aff1Bh, dropFrom(dfView, aff1Bh))
-    val changedCks = oldCks
+    val changedCks = materialized(oldCks
       .unionByName(scoredAff.filter(col("q") >= 0.5).select(col("ck")))
-      .distinct().persist()
+      .distinct())
     val aff2Parts = Scratch.routeBuckets(s.read.parquet(d.cm), "ckbkt",
         changedCks.select(ckBktOf(col("ck"))))
       .join(changedCks.hint("shuffle_hash"), Seq("ck"))
@@ -1188,8 +1184,8 @@ object Incremental {
     // ---- Rewrite ONLY the affected shards (surviving docs, staged) ---
     val rwDocs = docsView(affectedParts)
     val rwBlocks = Curation.webBlocksOf(rwDocs)
-    val rwBh = Curation.bhOf(rwBlocks).persist()
-    val scoredRw = scoredFromBh(rwBlocks, rwBh, dropFrom(dfView, rwBh)).persist()
+    val rwBh = materialized(Curation.bhOf(rwBlocks))
+    val scoredRw = materialized(scoredFromBh(rwBlocks, rwBh, dropFrom(dfView, rwBh)))
     val ckNew = scoredRw.filter(col("q") >= 0.5)
       .select(col("doc_id"), col("ck"), partOf(col("doc_id")).as("part"))
     val cmNew = ckNew.groupBy(col("ck"), col("part"))
@@ -1209,8 +1205,6 @@ object Incremental {
       .write.mode("overwrite").partitionBy("part", "ckbkt").parquet(st("ck"))
     cmNew.withColumn("ckbkt", ckBktOf(col("ck")))
       .write.mode("overwrite").partitionBy("part", "ckbkt").parquet(st("cm"))
-    Seq(scoredRw, rwBh, changedCks, aff1Bh)
-      .foreach(_.unpersist(blocking = false))
     failIf(d.root, "pre-manifest")
     commitNight(d, stage,
       replaces = Seq(

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graft.CatalystBridge
 import graft.sources.{Pinned, Scratch, Tables}
 import graft.functions.VectorFunctions.vecDot
 
@@ -164,11 +165,11 @@ object Similarity {
     * degenerates to the single-file-per-cell the spec pins. */
   private[graft] def compactCells(src: DataFrame, dest: String,
       rowsPerFile: Long = 500000L): Unit = {
-    val sizes = src.groupBy(col("label")).agg(count(lit(1)).as("_n"))
-      .select(col("label"),
-        greatest(ceil(col("_n").cast("double") / rowsPerFile), lit(1))
-          .cast("int").as("_nf"))
-      .persist()
+    val sizes = CatalystBridge.materialized(
+      src.groupBy(col("label")).agg(count(lit(1)).as("_n"))
+        .select(col("label"),
+          greatest(ceil(col("_n").cast("double") / rowsPerFile), lit(1))
+            .cast("int").as("_nf")))
     // Shuffle width = the TOTAL file budget (one driver-side scalar per
     // compaction run — the documented one-row class): with the default
     // partition count, several buckets of one cell can hash into one
@@ -185,8 +186,6 @@ object Similarity {
       .repartition(math.max(1, width), col("label"), col("_b"))
       .drop("_nf", "_b")
       .write.mode("overwrite").partitionBy("label").parquet(dest)
-    sizes.unpersist(blocking = false)
-    ()
   }
 
   private[graft] def ivfRefreshedDirs(s: SparkSession, d: String): (String, String) = {

@@ -13,13 +13,13 @@ import graft.sources.Scratch
   *
   * PipesSpec proves the DSL mechanics (fan-out fidelity, lifecycle);
   * this registers the deployment shape itself as an oracle-checked query:
-  * the shared subtree is persisted ONCE (the F4 broadcast-fidelity rule),
+  * the shared subtree is materialized ONCE (the F4 broadcast-fidelity rule),
   * both sinks are real parquet writers running concurrently via
   * one Runner.run(), and the query's result is the union of what the
   * two sinks actually WROTE — so the driver's hash gate checks the whole
   * pipeline end to end, not a DataFrame that merely resembles it.
   *
-  * Scale: the fan-out persist is MEMORY_AND_DISK on the cleaned
+  * Scale: the fan-out relation is MEMORY_AND_DISK on the cleaned
   * projection (columns the branches need, not full text); each branch is
   * an independent partial-aggregated groupBy; the sinks write
   * distributed. Nothing here is fixture-shaped.
@@ -43,7 +43,7 @@ object PipelineQueries {
     //    windowless aggregations, each drained by its own FinalFn —
     //    Runner.run() launches both streaming queries CONCURRENTLY.
     //    Streaming fan-out fidelity comes from source replay, not a
-    //    persist (see PipelineBuilder.build step 5). Result = union of
+    //    cache (see PipelineBuilder.build step 5). Result = union of
     //    both sink relations; oracle = the two batch aggregations.
     "pp02_stream_diamond" -> ((s0, d) => {
       // Both diamond branches are stateful complete-mode aggregations:
@@ -89,7 +89,7 @@ object PipelineQueries {
       val b = new PipelineBuilder(s)
       val start = b.addStart[Row]("docs",
         sp => graft.sources.Tables.documents(sp, d).asInstanceOf[org.apache.spark.sql.Dataset[Row]])
-      // Shared middle: 2 downstream consumers → build() persists it once.
+      // Shared middle: 2 downstream consumers → build() materializes it once.
       val clean = b.addMiddle[Row, Row]("clean", ds =>
         ds.toDF().filter(length(trim(col("text"))) > 0)
           .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.graft.CatalystBridge
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 import scala.collection.mutable
@@ -15,8 +15,8 @@ import scala.collection.mutable
   *     `Sender[O].sendTo(Receiver[O])` only unifies on matching O
   *   - fan-out broadcast: every receiver sees every element
   *     (pipe/internal/connect/connectors.go:49-104) — multi-consumer
-  *     outputs are persisted once so all subtrees observe identical data
-  *     even for non-deterministic sources (SURVEY.md §7.4)
+  *     batch outputs are materialized once so all subtrees observe
+  *     identical data even for non-deterministic sources (SURVEY.md §7.4)
   *   - fan-in merge: N senders into one receiver = union
   *     (pipe/internal/connect/connectors.go:8-41)
   *   - last-write-wins node override by key (pipe/builder.go:21-28)
@@ -228,22 +228,23 @@ final class PipelineBuilder(spark: SparkSession, options: PipeOption*) {
       return Left(BuildError(s"pipeline graph has a cycle among: ${(liveKeys -- order).mkString(", ")}"))
 
     // 5. Materialize the Dataset DAG in topo order. Multi-consumer
-    //    BATCH outputs persist (broadcast-fidelity rule, SURVEY.md §7.4).
-    //    STREAMING outputs cannot persist (caching a streaming Dataset is
-    //    illegal) and don't need to: each consumer's query replays the
+    //    BATCH outputs go through CatalystBridge.materialized (broadcast-
+    //    fidelity rule, SURVEY.md §7.4): computed once by the first sink
+    //    that reads them, shared by every receiver, released by the
+    //    ContextCleaner once the Runner and its frames are unreachable.
+    //    STREAMING outputs cannot be cached (caching a streaming Dataset
+    //    is illegal) and don't need to be: each consumer's query replays the
     //    shared subtree from the replayable source — exactly-once source
     //    replay IS Structured Streaming's fan-out fidelity mechanism, so
     //    every receiver still observes every element (F4).
     //    Dataset construction is eager about analysis, so schema/type
     //    errors surface HERE, not at start() — the Build()-time check.
     val outs = mutable.Map.empty[String, Dataset[Any]]
-    val persisted = mutable.ArrayBuffer.empty[Dataset[Any]]
     val sinks = mutable.ArrayBuffer.empty[(String, Dataset[Any], FinalFn[Any])]
     val fanout = liveEdges.groupBy(_._1).map { case (k, es) => k -> es.size }
-    def shareOut(k: String, ds0: Dataset[Any]): Dataset[Any] =
-      if (fanout.getOrElse(k, 0) > 1 && !ds0.isStreaming) {
-        val ds = ds0.persist(StorageLevel.MEMORY_AND_DISK); persisted += ds; ds
-      } else ds0
+    def shareOut(k: String, ds: Dataset[Any]): Dataset[Any] =
+      if (fanout.getOrElse(k, 0) > 1 && !ds.isStreaming) CatalystBridge.materialized(ds)
+      else ds
     try {
       for (k <- order) {
         val inputs = liveEdges.filter(_._2 == k).map(e => outs(e._1))
@@ -264,16 +265,17 @@ final class PipelineBuilder(spark: SparkSession, options: PipeOption*) {
       case e: Throwable =>
         return Left(BuildError(s"analysis failed while wiring: ${e.getMessage}", Some(e)))
     }
-    Right(new Runner(sinks.toSeq, persisted.toSeq))
+    Right(new Runner(sinks.toSeq))
   }
 }
 
 /** Run lifecycle (pipe/runner.go:8-36): `start()` launches every sink
   * action concurrently (one Spark job each — the goroutine analog);
-  * `done()` blocks until all drain, then releases fan-out caches. */
+  * `done()` blocks until all drain. The runner holds no cache: a fan-out
+  * relation lives as long as the sink frames that read it, and the
+  * ContextCleaner drops its blocks once they are unreachable. */
 final class Runner private[pipeline] (
-    sinks: Seq[(String, Dataset[Any], FinalFn[Any])],
-    persisted: Seq[Dataset[Any]]) {
+    sinks: Seq[(String, Dataset[Any], FinalFn[Any])]) {
 
   private implicit val ec: ExecutionContext = ExecutionContext.global
   @volatile private var futures: Seq[Future[Unit]] = Seq.empty
@@ -288,7 +290,7 @@ final class Runner private[pipeline] (
     * we fail fast instead). */
   def done(): Unit = {
     Await.result(Future.sequence(futures), Duration.Inf)
-    persisted.foreach(_.unpersist(blocking = false))
+    ()
   }
 
   def run(): Unit = { start(); done() }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateT
 import org.apache.spark.sql.types.StructType
 import java.util.concurrent.atomic.AtomicInteger
 import graft.sources.Scratch
+import org.apache.spark.sql.graft.CatalystBridge.materialized
 
 /** st12 (transformWithState) processor: per-user distinct event-type
   * count held in a ValueState. The Spark-4 arbitrary-state API —
@@ -342,7 +343,7 @@ object Streams {
     val sel = graft.sources.Tables.events(s, d)
       .select(col("ts"), col("event_type"), col("value"))
     val feed = Scratch.staged(s, d, "feed_st06") { f =>
-      val ev = sel.persist()
+      val ev = materialized(sel)
       // One driver-side scalar (the global max event time) places the
       // cutoffs — the streaming plan itself stays fully distributed.
       val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
@@ -353,7 +354,6 @@ object Streams {
         "b1.parquet", t0)
       stageFeedFile(f, ev.filter(col("ts") > fresh), "b2.parquet", t0 + 60000)
       stageFeedFile(f, ev.filter(col("ts") <= cutoff), "b3.parquet", t0 + 120000)
-      ev.unpersist(blocking = false)
     }
     (feed, sel.schema)
   }
@@ -364,13 +364,12 @@ object Streams {
     val sel = graft.sources.Tables.events(s, d)
       .select(col("ts"), col("user_id"), col("event_type"))
     val feed = Scratch.staged(s, d, "feed_st14") { f =>
-      val ev = sel.persist()
+      val ev = materialized(sel)
       val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
       val split = lit(mx) - expr("INTERVAL 60 MINUTES")
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, ev.filter(col("ts") <= split), "b1.parquet", t0)
       stageFeedFile(f, ev.filter(col("ts") > split), "b2.parquet", t0 + 60000)
-      ev.unpersist(blocking = false)
     }
     (feed, sel.schema)
   }
@@ -379,7 +378,7 @@ object Streams {
     val sel = graft.sources.Tables.events(s, d)
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
     val feed = Scratch.staged(s, d, "feed_st16") { f =>
-      val ev = sel.persist()
+      val ev = materialized(sel)
       val mx = ev.agg(max(col("ts"))).collect()(0).getTimestamp(0)
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, ev, "b1.parquet", t0)
@@ -396,7 +395,6 @@ object Streams {
         when(col("id") === 0, "click").otherwise("view").as("event_type"))
       stageFeedFile(f, sentinels("3"), "b2.parquet", t0 + 60000)
       stageFeedFile(f, sentinels("6"), "b3.parquet", t0 + 120000)
-      ev.unpersist(blocking = false)
     }
     (feed, sel.schema)
   }
@@ -407,11 +405,10 @@ object Streams {
   private def docsFeed(s: SparkSession, d: String) = {
     val docs = graft.sources.Tables.documents(s, d)
     val feed = Scratch.staged(s, d, "feed_docs2") { f =>
-      val dd = docs.persist()
+      val dd = materialized(docs)
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, dd.filter(col("doc_id") % 2 === 0), "b1.parquet", t0)
       stageFeedFile(f, dd.filter(col("doc_id") % 2 =!= 0), "b2.parquet", t0 + 60000)
-      dd.unpersist(blocking = false)
     }
     (feed, docs.schema)
   }
@@ -419,11 +416,10 @@ object Streams {
   private def embFeed(s: SparkSession, d: String) = {
     val emb = graft.sources.Tables.embeddings(s, d)
     val feed = Scratch.staged(s, d, "feed_emb2") { f =>
-      val ee = emb.persist()
+      val ee = materialized(emb)
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f, ee.filter(col("vec_id") % 2 === 0), "b1.parquet", t0)
       stageFeedFile(f, ee.filter(col("vec_id") % 2 =!= 0), "b2.parquet", t0 + 60000)
-      ee.unpersist(blocking = false)
     }
     (feed, emb.schema)
   }
@@ -437,13 +433,12 @@ object Streams {
       .select(col("doc_id"), col("lang"), col("text"))
     val P = Incremental.Parts
     val feed = Scratch.staged(s, d, "feed_pl11d") { f =>
-      val dd = docs.persist()
+      val dd = materialized(docs)
       val t0 = System.currentTimeMillis() - 180000
       stageFeedFile(f,
         dd.filter(pmod(col("doc_id"), lit(P.toLong)) === P - 2), "b1.parquet", t0)
       stageFeedFile(f,
         dd.filter(pmod(col("doc_id"), lit(P.toLong)) === P - 1), "b2.parquet", t0 + 60000)
-      dd.unpersist(blocking = false)
     }
     (feed, docs.schema)
   }
@@ -860,10 +855,9 @@ object Streams {
     // the bulk of st19's 870 tasks/run. Guide §6's output-sizing rule:
     // a trigger that ingested k scan splits appends ~k ledger files.
     val k = math.max(1, batch.rdd.getNumPartitions)
-    val sets = Dedup.shingleSetsOf(
-      batch.repartition(ss.sparkContext.defaultParallelism, col("doc_id")))
-      .persist()
-    val bands = Dedup.bandKeysOf(Dedup.minhashWideOf(sets, 8)).persist()
+    val sets = materialized(Dedup.shingleSetsOf(
+      batch.repartition(ss.sparkContext.defaultParallelism, col("doc_id"))))
+    val bands = materialized(Dedup.bandKeysOf(Dedup.minhashWideOf(sets, 8)))
     val intra = bands.as("a")
       .join(bands.as("b"),
         col("a.bk") === col("b.bk") && col("a.doc_id") < col("b.doc_id"))
@@ -880,12 +874,10 @@ object Streams {
       .coalesce(k).write.mode("append").parquet(outDir)
     // Ledger append AFTER the probe: this batch's docs must not
     // cross-match themselves (intra already covered in-batch).
-    // coalesce(k) on the PERSISTED frames is a narrow merge of cached
+    // coalesce(k) on the MATERIALIZED frames is a narrow merge of cached
     // partitions — no recompute, no extra exchange.
     bands.coalesce(k).write.mode("append").parquet(bandsDir)
     sets.coalesce(k).write.mode("append").parquet(setsDir)
-    sets.unpersist(blocking = false)
-    bands.unpersist(blocking = false)
     // Threshold-gated small-file collapse: the signature ledger buckets
     // by band key (the probe's join key), the shingle ledger by doc_id
     // (the verify's lookup key).
@@ -932,10 +924,10 @@ object Streams {
     // batch size), only the ledger/pair APPENDS collapse to ~one file
     // per ingested scan split.
     val k = math.max(1, batch.rdd.getNumPartitions)
-    val bands = Multimodal.phashBands(
+    val bands = materialized(Multimodal.phashBands(
       Multimodal.phashWideOf(
         batch.repartition(ss.sparkContext.defaultParallelism, col("doc_id"))),
-      Multimodal.WideHashBits, 2, 15).persist()
+      Multimodal.WideHashBits, 2, 15))
     val intra = bands.as("a").hint("shuffle_hash")
       .join(bands.as("b").hint("shuffle_hash"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
@@ -954,7 +946,6 @@ object Streams {
       .coalesce(k).write.mode("append").parquet(outDir)
     // Ledger append AFTER the probe (intra already covered in-batch).
     bands.coalesce(k).write.mode("append").parquet(bandsDir)
-    bands.unpersist(blocking = false)
     // Threshold-gated small-file collapse, bucketed by the probe's
     // (band, bv) join key.
     ledgerCompact(bandsDir, Seq(col("band"), col("bv")), maxDeltas)
@@ -1518,11 +1509,8 @@ object Streams {
       val canon = Curation.stagedCanon(s, d)
       val outDir = Scratch.fresh(s, d, "st32_out")
       runEach(feed(s, docsFeed(s, d))) { (batch, _) =>
-        // Managed variant: the extraction-derived intermediates are
-        // persisted for the trigger; release them after the write.
-        val (rows, done) = Curation.funnelPartialManaged(batch, dropSet, canon)
-        try rows.write.mode("append").parquet(outDir)
-        finally done()
+        Curation.funnelPartial(batch, dropSet, canon)
+          .write.mode("append").parquet(outDir)
       }
       s.read.parquet(outDir).distinct()
     }),
@@ -1668,13 +1656,10 @@ object Streams {
       runEach(feed(s, embFeed(s, d))) { (batch, _) =>
         val topk = Similarity.ivfServePartial(batch, idx)
           .select(col("query_id"), col("neighbor_id"), col("rnk"))
-        // ragAssembleLocal persists the probe internally (it is
-        // referenced several times in the per-batch plan) and hands
-        // back the release hook; invoke it once the sink write has
-        // consumed the result (funnelPartialManaged's contract).
-        val (rows, done) = Curation.ragAssembleLocal(topk, docServe)
-        try rows.write.mode("append").parquet(outDir)
-        finally done()
+        // ragAssembleLocal materializes the probe internally (it is
+        // referenced several times in the per-batch plan).
+        Curation.ragAssembleLocal(topk, docServe)
+          .write.mode("append").parquet(outDir)
       }
       s.read.parquet(outDir).distinct()
     }),
@@ -1963,14 +1948,11 @@ object Streams {
       val bench = Dedup.benchGramSet(s, d)
       val outDir = Scratch.fresh(s, d, "pl04_out")
       runEach(feed(s, docsFeed(s, d))) { (batch0, bid) =>
-        val batch = batch0
+        val batch = materialized(batch0
           .repartition(batch0.sparkSession.sparkContext.defaultParallelism,
-            col("doc_id"))
-          .persist()
+            col("doc_id")))
         curationPartial(batch, bid, bench)
           .write.mode("append").parquet(outDir)
-        batch.unpersist(blocking = false)
-        ()
       }
       curationMerge(s.read.parquet(outDir))
     })

@@ -1,8 +1,10 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, Dataset, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 scopes these conversions
   * `private[sql]` (the Column API became backend-agnostic for Connect),
@@ -36,17 +38,29 @@ object CatalystBridge {
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
-  /** Materialize `df` once per query that reads it, however many subtrees
-    * reference the result: an `InMemoryRelation` over the frame's own
-    * query execution, NOT registered in the session's CacheManager. The
-    * cached RDD keeps its lineage (a lost block is recomputed), the
-    * subplan prints under every consumer's `InMemoryTableScan`, and the
-    * RDD is persisted at the RDD level, so the ContextCleaner drops its
-    * blocks once the returned frame is unreachable — no later query can
-    * hit it, unlike `Dataset.persist`. Lazy: the first action fills it. */
-  def materialized(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    ofRows(df.sparkSession, org.apache.spark.sql.execution.columnar.InMemoryRelation(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK, df.queryExecution, None))
+  /** THE way to share a subplan within a query (the pipes Forker: one
+    * output, N readers). Materializes `ds` once, however many subtrees
+    * or actions read the returned frame: an `InMemoryRelation` over the
+    * frame's own query execution, NOT registered in the session's
+    * CacheManager. The cached RDD keeps its lineage (a lost block is
+    * recomputed), the subplan prints under every consumer's
+    * `InMemoryTableScan`, and the RDD is persisted at the RDD level, so
+    * the ContextCleaner drops its blocks once the returned frame is
+    * unreachable; no caller releases anything, and no other frame (or
+    * later query) can hit it, unlike `Dataset.persist`. Only readers of
+    * the RETURNED frame share it. Lazy: the first action fills it.
+    * Width: the relation keeps the frame's output partitioning and its
+    * scan reports it, so a consumer joining on those keys plans no
+    * exchange on that side, and AQE does not coalesce that stage. */
+  def materialized[T](ds: Dataset[T]): Dataset[T] = {
+    val r = InMemoryRelation(StorageLevel.MEMORY_AND_DISK, ds.queryExecution, None)
+    // No output ordering: a relation read twice in one plan (self-join,
+    // union) is deduplicated with `newInstance`, which renews the output
+    // attributes but not the ordering's, and canonicalizing that copy
+    // (any CacheManager lookup) then fails on the stale attribute.
+    classic.Dataset(ds.sparkSession.asInstanceOf[classic.SparkSession],
+      InMemoryRelation(r.output, r.cacheBuilder, Nil, r.statsOfPlanToCache))(ds.encoder)
+  }
 
   /** Entries in the session's CacheManager (`Dataset.persist`/`CACHE TABLE`). */
   def cachedEntries(spark: SparkSession): Int =

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.graft.CatalystBridge
+
 /** THE TYPE CONTRACT, pinned in-tree: for every registered query, the
   * DuckDB logical types of the Spark output parquet must equal the
   * DuckDB logical types of its oracle SQL — the comparison the
@@ -68,14 +70,24 @@ class OracleTypeContractSpec extends SparkSpec {
     val out = java.nio.file.Files
       .createTempDirectory("graft_typegate").toString
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    // Query paths share subplans only through CatalystBridge.materialized,
+    // which registers nothing: the session-wide CacheManager must hold
+    // the same entries before and after every query.
+    val cacheGrew = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
+      val cached = CatalystBridge.cachedEntries(spark)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$out/$name")
       catch { case e: Throwable => failed += s"$name: ${e.getMessage}" }
+      val after = CatalystBridge.cachedEntries(spark)
+      if (after != cached) cacheGrew += s"$name: $cached -> $after"
     }
     assert(failed.isEmpty,
       s"queries failed at sf0.001 (type sweep needs all outputs):\n" +
         failed.mkString("\n"))
+    assert(cacheGrew.isEmpty,
+      "queries changed the session's CacheManager entries:\n" +
+        cacheGrew.mkString("\n"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$out/oracle_sql.json"),
       Verify.oracleJson.getBytes("UTF-8"))

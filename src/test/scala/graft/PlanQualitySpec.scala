@@ -434,9 +434,9 @@ class PlanQualitySpec extends SparkSpec {
       .select(col("vec_id").as("query_id"),
         (col("vec_id") + 1).as("neighbor_id"), lit(1).as("rnk"))
       .limit(50)
-    val (df, ragDone) = Curation.ragAssembleLocal(topk,
+    val df = Curation.ragAssembleLocal(topk,
       Curation.stagedDocServe(spark, sfDir))
-    val p = try df.queryExecution.executedPlan.toString finally ragDone()
+    val p = df.queryExecution.executedPlan.toString
     // The lookup-artifact scan carries the batch's bucket set as a
     // static PartitionFilter (planning-time directory pruning).
     val pf = partitionFilters(scanLine(p, "graft_docserve"))

@@ -345,12 +345,10 @@ class StreamingReplaySpec extends SparkSpec {
         .select(col("query_id"), col("neighbor_id"), col("rnk"))
       Curation.ragAssembleLocal(topk, docServe)
     }
-    val partials = assembled.map(_._1).reduce(_ unionByName _).distinct()
+    val partials = assembled.reduce(_ unionByName _).distinct()
     val expected = graft.SparkEntry.queries("pl06_rag_context")(spark, sfDir)
-    try {
-      assert(partials.count() == expected.count())
-      assert(partials.except(expected).isEmpty && expected.except(partials).isEmpty)
-    } finally assembled.foreach(_._2())
+    assert(partials.count() == expected.count())
+    assert(partials.except(expected).isEmpty && expected.except(partials).isEmpty)
   }
 
   test("pl04 curation partials merge identically under any split + replay") {

@@ -292,6 +292,116 @@ class OperatorsSpec extends SparkSpec {
     assert(rollup() == first)
   }
 
+  // A materialized frame read twice in one plan (the Pipes diamond's
+  // fan-in union, st19's band self-join): the analyzer renews one copy's
+  // output attributes, and every CacheManager lookup canonicalizes the
+  // plan. An ordered source (range) must survive both.
+  test("a materialized frame can be read twice in one plan") {
+    import org.apache.spark.sql.graft.CatalystBridge
+    val m = CatalystBridge.materialized(spark.range(10).toDF("id"))
+    val union = m.unionByName(m)
+    val self = m.join(m.select(col("id").as("id2")), col("id") === col("id2"))
+    Seq(union, self).foreach(_.queryExecution.analyzed.canonicalized)
+    assert(union.agg(sum(col("id"))).head().getLong(0) == 90L)
+    assert(self.count() == 10L)
+  }
+
+  /** Partition counts of the relations `body` shares through
+    * CatalystBridge.materialized, in creation order. Read off the stage
+    * infos while the body runs: a site's relations are released once it
+    * returns, so `sc.getPersistentRDDs` may no longer list them
+    * afterwards. A materialized relation's RDD is named by its cached
+    * plan; a localCheckpoint's RDD is unnamed (its info carries the
+    * class name) and is left out. */
+  private def materializedWidths(body: => Unit): Seq[Int] = {
+    import org.apache.spark.scheduler._
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val marker = s"materialized-widths-${System.nanoTime()}"
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos
+          .filter(r => r.storageLevel.isValid && r.name != "MapPartitionsRDD")
+          .foreach(r => seen.put(r.id, r.numPartitions))
+      // Events reach a listener in order: once this marker job's start
+      // arrives, every stage of the body has been seen.
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq.sortBy(_._1).map(_._2)
+  }
+
+  // The width of every converted site's shared relation at sf0.001 on
+  // local[4]. A materialized relation keeps its plan's output
+  // partitioning. A plan whose last stage reads the fixture scan's
+  // fixed repartition(4, key) layout, or a parquet scan with no
+  // exchange at all, stays 4 wide (8 for nightOf's two-scan union);
+  // AQE coalesces the rest to 1. webScored's scored relation is 4 wide
+  // because its join's blocks side is a scan of the materialized blocks
+  // relation, which already reports hashpartitioning(doc_id, 4): no
+  // exchange is planned on that side, and AQE does not coalesce a stage
+  // with a leaf that is not a shuffle stage.
+  test("each materialized site's relations keep their plan's width") {
+    import graft.streaming.Streams
+    import spark.implicits._
+    def widths(body: => Any): Seq[Int] = materializedWidths { body; () }
+    val tmp = java.nio.file.Files.createTempDirectory("graft_widths").toString
+    val docs = graft.sources.Tables.documents(spark, sfDir)
+    assert(widths(Curation.webScored(spark, sfDir).count()) == Seq(4, 4))
+    val topk = graft.sources.Tables.embeddings(spark, sfDir)
+      .select(col("vec_id").as("query_id"),
+        (col("vec_id") + 1).as("neighbor_id"), lit(1).as("rnk")).limit(50)
+    val docServe = Curation.stagedDocServe(spark, sfDir)
+    assert(widths(Curation.ragAssembleLocal(topk, docServe).collect()) == Seq(1))
+    val (dropSet, canon) =
+      (Curation.stagedDropSet(spark, sfDir), Curation.stagedCanon(spark, sfDir))
+    assert(widths(Curation.funnelPartial(docs.limit(40), dropSet, canon)
+      .collect()) == Seq(1, 1))
+    assert(widths(Similarity.compactCells(spark.range(100).select(
+      col("id").as("vec_id"), (col("id") % 3).cast("int").as("label")),
+      s"$tmp/cells")) == Seq(1))
+    val pairs = Dedup.queries("dd03_minhash_lsh_pairs")(spark, sfDir)
+      .select(col("doc_a"), col("doc_b"))
+    assert(widths(Dedup.componentsOf(pairs).collect()) == Seq(4))
+    val half = docs.filter(col("doc_id") % 2 === 0)
+    Streams.neardupSeed(docs.limit(0), s"$tmp/bands", s"$tmp/sets", s"$tmp/pairs")
+    assert(widths(Streams.neardupStep(half, s"$tmp/bands", s"$tmp/sets",
+      s"$tmp/pairs")) == Seq(4, 4))
+    Streams.phashSeed(docs.limit(0), s"$tmp/pbands", s"$tmp/ppairs")
+    assert(widths(Streams.phashStep(half, s"$tmp/pbands", s"$tmp/ppairs")) == Seq(4))
+    val d = Incremental.Dirs(s"$tmp/inc")
+    val night = col("doc_id") % Incremental.Parts === 7
+    assert(widths(Incremental.baseBuild(spark, d, docs.filter(!night))) == Seq(4, 1))
+    assert(widths(Incremental.nightOf(spark, d, docs.filter(night), 7)) ==
+      Seq(4, 1, 1, 1, 1, 8, 1))
+    // Three of purgeNightOf's four relations: its tier-1 hashes (aff1Bh)
+    // are empty for this purge, a relation of 0 partitions, so no stage.
+    assert(widths(Incremental.purgeNightOf(spark, d, Seq(13L, 14L).toDF("doc_id")))
+      == Seq(1, 1, 1))
+    // A fresh copy of the fixture: the feeds are staged once per
+    // (application, fixture), so the shared test session may have
+    // staged sfDir's already.
+    val fixture = s"$tmp/fixture"
+    new java.io.File(fixture).mkdirs()
+    new java.io.File(sfDir).listFiles().foreach(f => java.nio.file.Files.copy(
+      f.toPath, new java.io.File(fixture, f.getName).toPath))
+    // st06, st14, st16, docs, emb, pl11's delta shards.
+    assert(widths(Streams.prepareFeeds(spark, fixture)) == Seq(4, 4, 4, 4, 4, 4))
+    // pl04's per-batch frame, one per micro-batch of the docs feed.
+    assert(widths(graft.SparkEntry.queries("pl04_stream_curation")(spark, fixture)
+      .collect()) == Seq(4, 4))
+  }
+
   // pl09: the epoch plan must account for EVERY upsampled copy exactly
   // once across shards, with non-degenerate routing and budgets.
   test("pl09 shards cover every ta35 copy exactly once") {

@@ -36,6 +36,43 @@ class PipesSpec extends SparkSpec {
           "even: 2", "even: 4", "even: 6", "even: 8"))
   }
 
+  // The Forker (connectors.go:49-104) sends ONE output to N receivers:
+  // a batch start with two receivers runs once, not once per receiver,
+  // and the runner owns no cache — once it and its frames are gone, the
+  // ContextCleaner has dropped the fan-out relation.
+  test("batch fan-out computes its sender once and leaves no cached RDD") {
+    val sc = spark.sparkContext
+    val rows = sc.longAccumulator("fanout_rows")
+    val before = sc.getPersistentRDDs.keySet
+    def run(): (Long, Long, Set[Int]) = {
+      val b = new PipelineBuilder(spark)
+      val src = b.addStart("src", s => {
+        import s.implicits._
+        s.range(0, 1000).as[Long].map { n => rows.add(1); n }
+      })
+      val sums = new ConcurrentLinkedQueue[Long]()
+      val sinkA = b.addFinal("a", (ds: Dataset[Long]) => { sums.add(ds.count()); () })
+      val sinkB = b.addFinal("b", (ds: Dataset[Long]) => {
+        sums.add(ds.filter(_ % 2 == 0).count()); ()
+      })
+      b.sendTo(src, sinkA, sinkB)
+      b.build().fold(e => fail(e.message), _.run())
+      (sums.asScala.max, sums.asScala.min, sc.getPersistentRDDs.keySet.toSet -- before)
+    }
+    val (all, evens, fanned) = run()
+    assert((all, evens) === ((1000L, 500L)))
+    assert(rows.value === 1000L, "the shared start ran once per receiver")
+    assert(fanned.nonEmpty, "the fan-out relation was not materialized")
+    var left = fanned
+    var tries = 0
+    while (left.nonEmpty && tries < 20) {
+      System.gc(); Thread.sleep(250)
+      left = fanned & sc.getPersistentRDDs.keySet.toSet
+      tries += 1
+    }
+    assert(left.isEmpty, s"fan-out RDDs $left outlived the runner")
+  }
+
   // bypass_test.go:68-138: a disabled stage adds zero plan nodes; chains
   // of bypasses collapse transitively.
   test("bypass is zero-cost and transitive") {

@@ -218,13 +218,17 @@ class SourcesSpec extends SparkSpec {
     Scratch.deleteRec(new java.io.File(dir))
   }
 
-  test("java.io.tmpdir is read only in graft/sources/Scratch.scala") {
+  private def mainSources: Seq[java.io.File] = {
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"no sources at ${root.getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
       else Seq(f)
-    val sources = walk(root).filter(_.getName.endsWith(".scala"))
+    walk(root).filter(_.getName.endsWith(".scala"))
+  }
+
+  test("java.io.tmpdir is read only in graft/sources/Scratch.scala") {
+    val sources = mainSources
     assert(sources.exists(_.getPath.endsWith("graft/sources/Scratch.scala")))
     val offenders = sources
       .filterNot(_.getPath.endsWith("graft/sources/Scratch.scala"))
@@ -233,5 +237,26 @@ class SourcesSpec extends SparkSpec {
     assert(offenders.isEmpty,
       "derive scratch paths with graft.sources.Scratch instead: " +
         offenders.mkString(", "))
+  }
+
+  // One way to share a subplan: CatalystBridge.materialized. A
+  // Dataset.persist registers in the CacheManager every session of the
+  // SparkContext shares, and needs a hand-placed release.
+  test("no persist, cache or unpersist in src/main outside CatalystBridge.scala") {
+    val bridge = "org/apache/spark/sql/graft/CatalystBridge.scala"
+    val sources = mainSources
+    assert(sources.exists(_.getPath.endsWith(bridge)))
+    val call = """\.persist\(|\.cache\(\)|unpersist""".r
+    val hits = for {
+      f <- sources if !f.getPath.endsWith(bridge)
+      (line, i) <- new String(Files.readAllBytes(f.toPath), "UTF-8")
+        .linesIterator.zipWithIndex
+      m <- call.findAllIn(line)
+    } yield s"${f.getPath}:${i + 1}: $m"
+    assert(hits.isEmpty,
+      s"share a subplan with CatalystBridge.materialized instead " +
+        s"(${hits.count(_.endsWith(".persist("))} persist, " +
+        s"${hits.count(_.endsWith("unpersist"))} unpersist, " +
+        s"${hits.count(_.endsWith(".cache()"))} cache):\n" + hits.mkString("\n"))
   }
 }
