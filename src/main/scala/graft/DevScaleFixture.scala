@@ -37,7 +37,7 @@ object DevScaleFixture {
     // schema, and the type-branching readers/oracles with it).
     var shiftType: String => org.apache.spark.sql.types.DataType = null
     def copies(t: String)(remap: (DataFrame, Long) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$src/$t.parquet")
+      val base = graft.sources.Tables.read(spark, s"$src/$t.parquet")
       shiftType = c => base.schema(c).dataType
       val all = (0 until k).map(i => remap(base, i.toLong)).reduce(_ unionAll _)
       all.repartition(cpus.toInt)
@@ -90,7 +90,7 @@ object DevScaleFixture {
     }
     // Uninflated dimensions: copy through unchanged.
     Seq("region", "nation").foreach { t =>
-      spark.read.parquet(s"$src/$t.parquet")
+      graft.sources.Tables.read(spark, s"$src/$t.parquet")
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
       println(s"[scale] $t (copied) -> $out/$t.parquet")
     }

@@ -19,7 +19,8 @@ object SparkEntry {
 
   /** The one SparkSession builder, shared by the mains (Bench, Verify,
     * Smoke, DevScaleFixture) and the test base: `local[cpus]` with the
-    * shuffle width matched to it, UTC, no UI, WARN logging. */
+    * shuffle width matched to it, UTC, no UI, WARN logging, and a
+    * generated-code cache sized for the registry ([[CodegenCacheEntries]]). */
   private[graft] def localSession(cpus: String,
       appName: Option[String] = None): SparkSession = {
     val b = SparkSession.builder()
@@ -27,10 +28,19 @@ object SparkEntry {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
     val s = appName.fold(b)(b.appName).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** Entries of Spark's JVM-wide generated-class cache (a static conf,
+    * so only the builder can set it; Spark's default is 100). The seven
+    * `llm_curation` queries alone need 125 classes, so at the default
+    * every warm pass recompiled 82–97 of them (about 1 s of Janino time).
+    * One `Verify` pass over the whole registry at sf0.01 compiles 4,245
+    * classes with this cache, so it holds a pass with room to spare. */
+  private[graft] val CodegenCacheEntries = 8192
 
   /** The mains' width: 32 per the target environment (local[32]);
     * SPARK_GRAFT_CPUS overrides for constrained dev runs. */

@@ -163,8 +163,7 @@ object Advanced {
     //    an aggregated join under the hood — the scalable form — while
     //    the user writes the natural correlated form.
     "q38_correlated_subquery" -> ((s, d) => {
-      Tables.lineitem(s, d).createOrReplaceTempView("li_q38")
-      s.sql(
+      graft.Exprs.sqlOver(s, "li_q38" -> Tables.lineitem(s, d))(
         """SELECT l_partkey,
              sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS small_lot_cents,
              count(*) AS n_small
@@ -181,9 +180,8 @@ object Advanced {
     //    key, no nested-loop re-execution per outer row; semantically the
     //    per-key top-k that TopKPerGroup (q43) implements natively.
     "q53_lateral_join" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("c_q53")
-      Tables.orders(s, d).createOrReplaceTempView("o_q53")
-      s.sql(
+      graft.Exprs.sqlOver(s,
+          "c_q53" -> Tables.customer(s, d), "o_q53" -> Tables.orders(s, d))(
         """SELECT c.c_custkey, t.o_orderkey, t.o_totalprice
            FROM c_q53 c,
            LATERAL (SELECT o_orderkey, o_totalprice FROM o_q53 o
@@ -197,9 +195,8 @@ object Advanced {
     //    case exercises the null-vs-zero rewrite (empty group must yield
     //    0, not NULL — Spark inserts the coalesce; DuckDB agrees).
     "q54_scalar_subquery" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("c_q54")
-      Tables.orders(s, d).createOrReplaceTempView("o_q54")
-      s.sql(
+      graft.Exprs.sqlOver(s,
+          "c_q54" -> Tables.customer(s, d), "o_q54" -> Tables.orders(s, d))(
         """SELECT c_custkey,
                   (SELECT max(o_totalprice) FROM o_q54 o
                    WHERE o.o_custkey = c.c_custkey) AS max_price,
@@ -281,9 +278,8 @@ object Advanced {
 
     // -- IN subquery (SQL form of the semi-join; Catalyst plans LeftSemi).
     "q39_in_subquery" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("o_q39")
-      Tables.customer(s, d).createOrReplaceTempView("c_q39")
-      s.sql(
+      graft.Exprs.sqlOver(s,
+          "o_q39" -> Tables.orders(s, d), "c_q39" -> Tables.customer(s, d))(
         """SELECT o_orderstatus, count(*) AS n
            FROM o_q39
            WHERE o_custkey IN (SELECT c_custkey FROM c_q39 WHERE c_acctbal > 9000)

@@ -666,8 +666,12 @@ object Dedup {
     //    a pair differing in ≤3 bits must agree on ≥1 of the 4 bands, so
     //    the 4-way band join has 100% recall (no probabilistic miss) and
     //    32768 buckets per band bound bucket occupancy at corpus scale.
+    //    The fingerprints are materialized: otherwise the optimizer pushes
+    //    the join's inferred isnotnull(simhash) below the loader's
+    //    repartition, so the 60-bit fold runs in the one-task scan stage
+    //    and then again on both sides of the band join.
     "dd06_simhash_pairs" -> ((s, d) => {
-      val sh = simhash(s, d)
+      val sh = CatalystBridge.materialized(simhash(s, d))
       val banded = sh.select(col("doc_id"), col("simhash"),
           explode(expr(s"sequence(0, ${SimhashBands - 1})")).as("band"))
         .withColumn("bv", expr(s"(simhash >> (band * $SimhashBandBits)) & $SimhashBandMask"))

@@ -197,10 +197,9 @@ object Profile {
       // pinned per group: a key group counts into n_keys iff every key
       // part is non-null (count(distinct ...) semantics, dq05's null-PK
       // rule).
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       def keyRows(name: String, table: String,
           k1: String, k2: Option[String] = None): DataFrame = {
-        val df = s.read.parquet(s"$d/$table.parquet")
+        val df = Tables.read(s, s"$d/$table.parquet")
         val c1 = col(k1).cast("bigint")
         val c2 = k2.map(col(_).cast("bigint")).getOrElse(lit(null).cast("bigint"))
         val nn = k2.map(c => col(k1).isNotNull && col(c).isNotNull)
@@ -244,16 +243,17 @@ object Profile {
     //    queries at analysis time): compare each table's OBSERVED
     //    parquet footer schema against the DECLARED contract and emit
     //    one row per column with an ok / type_drift / missing /
-    //    unexpected verdict. Pure metadata — O(columns) footer reads,
-    //    zero data pages scanned at any corpus size (the audit a
-    //    100 TB ingest runs before anything else touches the data).
+    //    unexpected verdict. Pure metadata — O(columns) footer reads on
+    //    the driver (Tables.schemaOf), zero Spark jobs and zero data
+    //    pages scanned at any corpus size (the audit a 100 TB ingest
+    //    runs before anything else touches the data).
     //    `events` is deliberately excluded: its physical timestamp
     //    unit is fixture-variant by design (see Tables.events), so it
     //    has no single declared physical contract to audit against.
     "dq06_schema_drift" -> ((s, d) => {
       val tables = Seq("documents", "embeddings", "nation", "region")
       val observed = tables.flatMap { t =>
-        s.read.parquet(s"$d/$t.parquet").schema.fields
+        Tables.schemaOf(s, s"$d/$t.parquet").fields
           .map(f => (t, f.name, f.dataType.simpleString))
       }
       schemaDrift(s, declaredContract, observed)

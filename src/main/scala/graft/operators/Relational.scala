@@ -249,8 +249,7 @@ object Relational {
     // -- GROUPING SETS — the general form rollup/cube specialize. SQL
     //    text (like q38) since the DataFrame API has no direct builder.
     "q46_grouping_sets" -> ((s, d) => {
-      Tables.orders(s, d).createOrReplaceTempView("o_q46")
-      s.sql(
+      graft.Exprs.sqlOver(s, "o_q46" -> Tables.orders(s, d))(
         """SELECT coalesce(o_orderstatus, 'ALL') AS status,
              coalesce(o_orderpriority, 'ALL') AS priority,
              count(*) AS n
@@ -473,8 +472,7 @@ object Relational {
     //    the loop count is a constant at 100 TB too. Output: customers
     //    per chain depth. DuckDB runs the identical standard SQL.
     "q65_recursive_cte" -> ((s, d) => {
-      Tables.customer(s, d).createOrReplaceTempView("c_q65")
-      s.sql("""
+      graft.Exprs.sqlOver(s, "c_q65" -> Tables.customer(s, d))("""
         WITH RECURSIVE chain(c, anc, depth) AS (
           SELECT c_custkey, c_custkey, 0 FROM c_q65
           UNION ALL

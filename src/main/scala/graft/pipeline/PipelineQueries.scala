@@ -54,7 +54,7 @@ object PipelineQueries {
       val s = graft.streaming.Streams.stateTuned(s0)
       val outA = Scratch.fresh(s, d, "pp02_by_type")
       val outB = Scratch.fresh(s, d, "pp02_by_user")
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = graft.sources.Tables.schemaOf(s, s"$d/events.parquet")
       val b = new PipelineBuilder(s, Pipes.ChannelBufferLen(1))
       val start = b.addFileStreamStart("events", d, schema, "events.parquet")
       val norm = b.addMiddle[Row, Row]("normalize", ds =>

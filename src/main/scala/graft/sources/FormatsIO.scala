@@ -227,9 +227,9 @@ object FormatsIO {
       // application side's shuffle — Tables.load's fixture repartition
       // would sit between them and block both (at 100 TB the scan has
       // thousands of row-groups and that repartition never exists).
-      val fact = s.read.parquet(s"$d/lineitem.parquet")
+      val fact = Tables.read(s, s"$d/lineitem.parquet")
         .select(col("l_orderkey"), col("l_returnflag"), col("l_extendedprice"))
-      val dim = s.read.parquet(s"$d/orders.parquet")
+      val dim = Tables.read(s, s"$d/orders.parquet")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"))
       fact.join(dim, col("l_orderkey") === col("o_orderkey"))
@@ -261,7 +261,7 @@ object FormatsIO {
       // shuffle then carries REPARTITION_BY_COL origin, and
       // OptimizeSkewedJoin only rewrites ENSURE_REQUIREMENTS shuffles,
       // vetoing the whole join. Learned by measurement.)
-      val dim = s.read.parquet(s"$d/orders.parquet")
+      val dim = Tables.read(s, s"$d/orders.parquet")
         .select(col("o_orderkey").as("k"), col("o_orderpriority"))
       fact.join(dim, Seq("k"), "left_outer")
         .groupBy(coalesce(col("o_orderpriority"), lit("UNMATCHED")).as("priority"))
@@ -321,7 +321,7 @@ object FormatsIO {
     //    plan advertises `PushedAggregation` (PlanQualitySpec pins it).
     "io11_agg_pushdown" -> ((s0, d) => {
       val s = aggPushSession(s0)
-      s.read.parquet(s"$d/lineitem.parquet")
+      Tables.read(s, s"$d/lineitem.parquet")
         .agg(
           count(lit(1)).as("n_rows"),
           min(col("l_orderkey")).as("min_key"),

@@ -171,14 +171,13 @@ object Streams {
     s
   }
 
-  /** Events as a *stream*: schema from a batch peek (schema inference is
-    * off in production streaming), ts normalized to TIMESTAMP exactly like
-    * the batch loader — `Tables.normalizeEventTs` branches on the loaded
-    * type so both fixture vintages (nanos-as-long, micros/NTZ) work. */
+  /** Events as a *stream*: schema from the fixture's footer (schema
+    * inference is off in production streaming), ts normalized to
+    * TIMESTAMP exactly like the batch loader — `Tables.normalizeEventTs`
+    * branches on the loaded type so both fixture vintages (nanos-as-long,
+    * micros/NTZ) work. */
   private def eventStream(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$d/events.parquet"
-    val schema = s.read.parquet(path).schema
+    val schema = graft.sources.Tables.schemaOf(s, s"$d/events.parquet")
     // The file-stream source lists a *directory*; the fixture is a single
     // file, so stream the parent dir with a glob filter on the file name.
     graft.sources.Tables.normalizeEventTs(
@@ -1765,7 +1764,7 @@ object Streams {
     "st18_stream_decontaminate" -> ((s0, d) => {
       val s = stateTuned(s0)
       val bench = graft.operators.Dedup.benchGramSet(s, d)
-      val schema = s.read.parquet(s"$d/documents.parquet").schema
+      val schema = graft.sources.Tables.schemaOf(s, s"$d/documents.parquet")
       val outDir = Scratch.fresh(s, d, "st18_out")
       runEach(s.readStream.schema(schema)
           .option("pathGlobFilter", "documents.parquet").parquet(d)) { (batch, _) =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, Dataset, SparkSession, classic}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.storage.StorageLevel
 
 /** Column ⇄ catalyst Expression bridge. Spark 4 scopes these conversions
@@ -61,6 +62,16 @@ object CatalystBridge {
     classic.Dataset(ds.sparkSession.asInstanceOf[classic.SparkSession],
       InMemoryRelation(r.output, r.cacheBuilder, Nil, r.statsOfPlanToCache))(ds.encoder)
   }
+
+  /** Spark's own conversion of a parquet footer to the schema that
+    * `spark.read.parquet` infers from it, under the session's SQL conf
+    * (timestamp-NTZ inference, `nanosAsLong`, binary-as-string): the
+    * Spark schema a Spark writer stored in the footer, else the converted
+    * parquet schema. */
+  def parquetSchema(spark: SparkSession,
+      footer: org.apache.parquet.hadoop.Footer): org.apache.spark.sql.types.StructType =
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
 
   /** Entries in the session's CacheManager (`Dataset.persist`/`CACHE TABLE`). */
   def cachedEntries(spark: SparkSession): Int =

@@ -74,13 +74,20 @@ class OracleTypeContractSpec extends SparkSpec {
     // which registers nothing: the session-wide CacheManager must hold
     // the same entries before and after every query.
     val cacheGrew = scala.collection.mutable.ArrayBuffer.empty[String]
+    // Query paths write no conf into the caller's session.
+    val confChanged = scala.collection.mutable.ArrayBuffer.empty[String]
     SparkEntry.queries.foreach { case (name, fn) =>
       val cached = CatalystBridge.cachedEntries(spark)
+      val conf = spark.conf.getAll
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$out/$name")
       catch { case e: Throwable => failed += s"$name: ${e.getMessage}" }
       val after = CatalystBridge.cachedEntries(spark)
       if (after != cached) cacheGrew += s"$name: $cached -> $after"
+      val confAfter = spark.conf.getAll
+      if (confAfter != conf) confChanged += s"$name: " +
+        (conf.keySet ++ confAfter.keySet).filter(k => conf.get(k) != confAfter.get(k))
+          .map(k => s"$k ${conf.get(k)} -> ${confAfter.get(k)}").mkString(", ")
     }
     assert(failed.isEmpty,
       s"queries failed at sf0.001 (type sweep needs all outputs):\n" +
@@ -88,6 +95,8 @@ class OracleTypeContractSpec extends SparkSpec {
     assert(cacheGrew.isEmpty,
       "queries changed the session's CacheManager entries:\n" +
         cacheGrew.mkString("\n"))
+    assert(confChanged.isEmpty,
+      "queries changed the caller's session conf:\n" + confChanged.mkString("\n"))
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$out/oracle_sql.json"),
       Verify.oracleJson.getBytes("UTF-8"))

@@ -619,6 +619,33 @@ class PlanQualitySpec extends SparkSpec {
       "pl05 broadcasts a corpus-derived relation:\n" + p.take(3000))
   }
 
+  test("SimHash fingerprints fold once, never below the loader's repartition (dd06)") {
+    import org.apache.spark.sql.catalyst.expressions.ArrayAggregate
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ReusedExchangeExec, ShuffleExchangeExec}
+    // Every node of the final plan, through AQE stages, reused exchanges,
+    // subqueries and materialized relations.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => nodes(r.child)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case o => (o.children ++ o.subqueries).flatMap(nodes)
+    })
+    val df = SparkEntry.queries("dd06_simhash_pairs")(spark, sfDir)
+    df.collect()
+    val loaderShuffles = nodes(df.queryExecution.executedPlan).collect {
+      case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM => e
+    }
+    assert(loaderShuffles.nonEmpty, "no loader repartition in dd06's plan")
+    val folds = loaderShuffles.flatMap(e => nodes(e.child)).filter(
+      _.expressions.exists(_.find(_.isInstanceOf[ArrayAggregate]).isDefined))
+    assert(folds.isEmpty,
+      "dd06 evaluates the SimHash fold below the loader's repartition:\n" +
+        folds.map(_.simpleString(200)).mkString("\n"))
+  }
+
   test("token-window chunking plans with zero operator exchanges (ta31)") {
     // Explode + project only: the in-row class (ta23/ta28). The ONLY
     // admissible exchange is the fixture loader's REPARTITION_BY_NUM

@@ -49,9 +49,10 @@ class VectorDotSpec extends SparkSpec {
   test("vec_dot is callable from SQL after registration") {
     VectorFunctions.register(spark)
     vecs.createOrReplaceTempView("emb_sql_test")
-    val r = spark.sql(
+    val r = try spark.sql(
       "SELECT vec_id, round(vec_dot(embedding, embedding), 6) AS nrm " +
       "FROM emb_sql_test ORDER BY vec_id LIMIT 1").collect()
+    finally spark.catalog.dropTempView("emb_sql_test")
     val expect = vecs.orderBy(col("vec_id")).limit(1)
       .select(round(vecDot(col("embedding"), col("embedding")), 6)).collect()
     assert(r(0).getDouble(1) === expect(0).getDouble(0))

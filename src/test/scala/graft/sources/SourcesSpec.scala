@@ -63,9 +63,11 @@ class SourcesSpec extends SparkSpec {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(dir.toString)
       .cache() // corrupt-record column cannot be queried alone uncached
-    assert(df.filter("_corrupt_record IS NULL").count() === 2)
-    assert(df.filter("_corrupt_record IS NOT NULL").count() === 2)
-    assert(df.filter("v = 'ok'").count() === 1)
+    try {
+      assert(df.filter("_corrupt_record IS NULL").count() === 2)
+      assert(df.filter("_corrupt_record IS NOT NULL").count() === 2)
+      assert(df.filter("v = 'ok'").count() === 1)
+    } finally df.unpersist(blocking = true)
   }
 
   // The DSv2 generator: rows match the closed form, id predicates reach
@@ -258,5 +260,23 @@ class SourcesSpec extends SparkSpec {
         s"(${hits.count(_.endsWith(".persist("))} persist, " +
         s"${hits.count(_.endsWith("unpersist"))} unpersist, " +
         s"${hits.count(_.endsWith(".cache()"))} cache):\n" + hits.mkString("\n"))
+  }
+
+  // Every fixture read takes its schema from the footer (Tables.read /
+  // Tables.schemaOf): a bare read.parquet of a fixture file infers it
+  // with a Spark job before the query starts its work.
+  test("no read.parquet of a fixture file in src/main outside Tables.scala") {
+    val tables = "graft/sources/Tables.scala"
+    val sources = mainSources
+    assert(sources.exists(_.getPath.endsWith(tables)))
+    val call = """\.read\.parquet\([^)]*\.parquet"""".r
+    val hits = for {
+      f <- sources if !f.getPath.endsWith(tables)
+      (line, i) <- new String(Files.readAllBytes(f.toPath), "UTF-8")
+        .linesIterator.zipWithIndex
+      if call.findFirstIn(line).nonEmpty
+    } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty,
+      "read fixtures with Tables.read / Tables.schemaOf:\n" + hits.mkString("\n"))
   }
 }

@@ -30,7 +30,10 @@ class LocalCheckpointFileManagerSpec extends SparkSpec {
     dirs += d
     d
   }
-  override def afterAll(): Unit = dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly(_): Unit)
+  override def afterAll(): Unit = {
+    dirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly(_): Unit)
+    super.afterAll()
+  }
   private def ours(dir: File) = new LocalCheckpointFileManager(new Path(dir.toURI), conf)
   private def write(m: CheckpointFileManager, p: Path, text: String, overwrite: Boolean): Unit = {
     val out = m.createAtomic(p, overwrite)

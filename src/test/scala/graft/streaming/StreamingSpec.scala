@@ -36,8 +36,9 @@ class StreamingSpec extends SparkSpec {
     mem.addData((ts(50), 1L))
     q.processAllAvailable()
     q.stop()
-    val out = spark.table("wm_test").collect()
+    val out = try spark.table("wm_test").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
+    finally spark.catalog.dropTempView("wm_test")
     assert(out("10:00") === 3L)   // 1+2; the late 100 was dropped
     assert(out("10:30") === 30L)  // 10+20
   }
@@ -89,8 +90,9 @@ class StreamingSpec extends SparkSpec {
       mem.addData((1L, "a"), (1L, "c"), (2L, "b"))
       q.processAllAvailable()
       q.stop()
-      val rows = spark.table("tws_test").collect()
+      val rows = try spark.table("tws_test").collect()
         .map(r => (r.getLong(0), r.getInt(1))).toSet
+      finally spark.catalog.dropTempView("tws_test")
       assert(rows === Set((1L, 2), (2L, 1), (1L, 3), (2L, 2)))
     } finally {
       prev match {
